@@ -8,6 +8,7 @@ runtime, so the same contract is implemented on plain parquet:
 
     base/
       snapshot=<id>/batch=<b>/tile=<t>/part-*.parquet  + _SUCCESS per batch
+      snapshot=<id>/_schema.json   (read schema, saved once all batches commit)
       _metrics/snapshot=<id>/...   (tile, rows, bytes, batch)
       _lineage/snapshot=<id>.json  (per-batch lineage records)
 
@@ -26,6 +27,7 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 
 def _batch_dir(base: str, snapshot: str, b: int) -> str:
@@ -111,16 +113,28 @@ def write_tiles_checkpointed(
                 return lineage
         shutil.rmtree(staging, ignore_errors=True)
 
-    # metrics table: per-tile rows + bytes, from the committed files
-    rows = (
-        spark.read.option("basePath", f"{base}/snapshot={snapshot}")
-        .parquet(f"{base}/snapshot={snapshot}/batch=*")
-        .groupBy(tile_col)
-        .agg(F.count("*").alias("rows"))
-    )
+    # metrics table: per-tile rows + bytes, from the committed files.  The
+    # schema inferred for this re-read is saved for read_snapshot, so later
+    # reads skip the inference job
+    snap_dir = f"{base}/snapshot={snapshot}"
+    files = glob.glob(f"{snap_dir}/batch=*/{tile_col}=*/*.parquet")
+    if files:
+        committed = spark.read.option("basePath", snap_dir).parquet(f"{snap_dir}/batch=*")
+    else:
+        # nothing to infer from: the input frame's columns, with the
+        # partition columns last as a read of a non-empty snapshot has them
+        fields = [f for f in df.schema.fields if f.name != tile_col] + [
+            StructField("batch", IntegerType()),
+            df.schema[tile_col],
+        ]
+        committed = spark.createDataFrame(
+            [], StructType([StructField(f.name, f.dataType, True) for f in fields])
+        )
+    _write_json_atomic(f"{snap_dir}/_schema.json", committed.schema.jsonValue())
+    rows = committed.groupBy(tile_col).agg(F.count("*").alias("rows"))
     sizes = {}
-    for f in glob.glob(f"{base}/snapshot={snapshot}/batch=*/tile=*/*.parquet"):
-        t = int(f.split("tile=")[1].split("/")[0])
+    for f in files:
+        t = int(f.split(f"{tile_col}=")[1].split("/")[0])
         sizes[t] = sizes.get(t, 0) + os.path.getsize(f)
     size_df = spark.createDataFrame(
         [(int(t), int(sz)) for t, sz in sizes.items()], f"{tile_col} long, bytes long"
@@ -131,6 +145,15 @@ def write_tiles_checkpointed(
     return lineage
 
 
+def _write_json_atomic(path: str, obj) -> None:
+    """Replace `path` with `obj` as JSON in one rename: a crash mid-write
+    leaves the previous file whole."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(obj, fh, indent=1)
+    os.replace(tmp, path)
+
+
 def _append_lineage(base: str, snapshot: str, rec: dict) -> None:
     os.makedirs(f"{base}/_lineage", exist_ok=True)
     lpath = f"{base}/_lineage/snapshot={snapshot}.json"
@@ -138,14 +161,22 @@ def _append_lineage(base: str, snapshot: str, rec: dict) -> None:
     if os.path.exists(lpath):
         with open(lpath) as fh:
             prior = json.load(fh)
-    with open(lpath, "w") as fh:
-        json.dump(prior + [rec], fh, indent=1)
+    _write_json_atomic(lpath, prior + [rec])
 
 
 def read_snapshot(spark, base: str, snapshot: str) -> DataFrame:
-    df = spark.read.option("basePath", f"{base}/snapshot={snapshot}").parquet(
-        f"{base}/snapshot={snapshot}/batch=*"
-    )
+    """One snapshot's rows.  The schema saved at commit is used when
+    present; a snapshot whose write never finished has none, and its
+    schema is inferred from the files."""
+    from .. import fsio
+
+    snap_dir = f"{base}/snapshot={snapshot}"
+    reader = spark.read.option("basePath", snap_dir)
+    schema_path = f"{snap_dir}/_schema.json"
+    if fsio.exists_any(schema_path):
+        schema = json.loads(fsio.read_text_any(schema_path))
+        reader = reader.schema(StructType.fromJson(schema))
+    df = reader.parquet(f"{snap_dir}/batch=*")
     # `batch` is the resume unit of the writer — a storage-layout
     # artifact, not data; surfacing it would make schemas depend on
     # n_batches
@@ -227,8 +258,7 @@ def append_filelist(
         with open(lpath) as fh:
             prior = json.load(fh)
     prior.append({"snapshot": snapshot, "timestamp": int(timestamp), "kind": kind})
-    with open(lpath, "w") as fh:
-        json.dump(prior, fh, indent=1)
+    _write_json_atomic(lpath, prior)  # the commit point of a snapshot
 
 
 def read_filelist(base: str) -> list[dict]:
@@ -385,10 +415,7 @@ def squash_snapshots(
     new_log = [
         {"snapshot": new_snapshot, "timestamp": int(ts), "kind": "base"}
     ] + sorted(kept, key=lambda e: e["timestamp"])
-    tmp = f"{base}/_filelist.json.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(new_log, fh, indent=1)
-    os.replace(tmp, f"{base}/_filelist.json")  # atomic commit
+    _write_json_atomic(f"{base}/_filelist.json", new_log)  # the commit point
     return lineage
 
 

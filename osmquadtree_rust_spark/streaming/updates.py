@@ -62,13 +62,21 @@ def update_decision_table(
     route_udf,
 ) -> DataFrame:
     """Emit the delta rows (id, tile, qt, changetype) per the reference's
-    decision table.
+    decision table, in one pass over the joined input.
 
     changes: (id, changetype) — Normal rows are harvested unchanged
     elements whose cell may have moved.
     stored:  (id, qt AS qt_old, alloc) — current assignment (per-snapshot
     checkpoint table).
     new_qts: (id, qt AS qt_new) — recomputed cells for touched ids.
+
+    Each id's decision row and its optional Remove tombstone are built
+    together as a two-element struct array over the single join + route
+    frame, nulls filtered out, then exploded: `stored` is read, and the
+    route UDF evaluated, once.  Two filtered branches of that frame joined
+    by a union would not share it — the tombstone branch's predicates turn
+    its left joins into inner joins, so neither exchange is reused and the
+    whole `stored` lineage runs twice.
     """
     j = (
         changes.join(stored.select("id", "qt_old", "alloc"), "id", "left")
@@ -77,64 +85,37 @@ def update_decision_table(
         # qt_new is non-null, but the vectorized UDF must not see nulls
         .withColumn("na", route_udf(F.coalesce(F.col("qt_new"), F.lit(0))))
     )
-    ct = F.col("changetype")
-    has_alloc = F.col("alloc").isNotNull()
-    has_q = F.col("qt_new").isNotNull()
+    ct, qt_new, qt_old = F.col("changetype"), F.col("qt_new"), F.col("qt_old")
+    na, alloc = F.col("na"), F.col("alloc")
+    has_alloc, has_q = alloc.isNotNull(), qt_new.isNotNull()
+    no_qt = F.lit(0).cast("long")
 
-    main = j.withColumn(
-        "emit",
+    def row(tile, qt, changetype):
+        return F.struct(tile.alias("tile"), qt.alias("qt"), changetype.alias("changetype"))
+
+    decision = (
         F.when(
-            (ct == NORMAL) & has_alloc & has_q & (F.col("qt_new") != F.col("qt_old")),
-            F.struct(
-                F.col("na").alias("tile"),
-                F.col("qt_new").alias("qt"),
-                F.lit(UNCHANGED).alias("changetype"),
-            ),
+            (ct == NORMAL) & has_alloc & has_q & (qt_new != qt_old),
+            row(na, qt_new, F.lit(UNCHANGED)),
         )
-        .when(
-            (ct == DELETE) & has_alloc,
-            F.struct(
-                F.col("alloc").alias("tile"),
-                F.lit(0).cast("long").alias("qt"),
-                F.lit(DELETE).alias("changetype"),
-            ),
-        )
-        .when(
-            (ct == MODIFY) & has_alloc & has_q,
-            F.struct(
-                F.col("na").alias("tile"),
-                F.col("qt_new").alias("qt"),
-                F.lit(MODIFY).alias("changetype"),
-            ),
-        )
-        .when(
-            ct.isin(MODIFY, CREATE) & ~has_alloc & has_q,
-            F.struct(
-                F.col("na").alias("tile"),
-                F.col("qt_new").alias("qt"),
-                ct.alias("changetype"),
-            ),
-        ),
-    ).filter(F.col("emit").isNotNull())
-
-    rows = main.select("id", "emit.tile", "emit.qt", "emit.changetype")
-
+        .when((ct == DELETE) & has_alloc, row(alloc, no_qt, F.lit(DELETE)))
+        .when((ct == MODIFY) & has_alloc & has_q, row(na, qt_new, F.lit(MODIFY)))
+        .when(ct.isin(MODIFY, CREATE) & ~has_alloc & has_q, row(na, qt_new, ct))
+    )
     # Remove tombstone in the old tile when the element moved tiles
     # (find_update.rs:552-560)
-    moved = j.filter(
+    moved = (
         ct.isin(NORMAL, MODIFY)
         & has_alloc
         & has_q
-        & (F.col("na") != F.col("alloc"))
-        & ((ct == MODIFY) | (F.col("qt_new") != F.col("qt_old")))
+        & (na != alloc)
+        & ((ct == MODIFY) | (qt_new != qt_old))
     )
-    tombstones = moved.select(
-        "id",
-        F.col("alloc").alias("tile"),
-        F.lit(0).cast("long").alias("qt"),
-        F.lit(REMOVE).alias("changetype"),
+    tombstone = F.when(moved, row(alloc, no_qt, F.lit(REMOVE)))
+    emit = F.filter(F.array(decision, tombstone), lambda e: e.isNotNull())
+    return j.select("id", F.explode(emit).alias("e")).select(
+        "id", "e.tile", "e.qt", "e.changetype"
     )
-    return rows.unionByName(tombstones)
 
 
 def run_update(

@@ -3,6 +3,7 @@
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from osmquadtree_rust_spark.plans import checkpoint as CK
@@ -275,8 +276,9 @@ def test_squash_and_vacuum(spark, tmp_path):
     # default grace window protects freshly-written (possibly in-flight,
     # not-yet-registered) snapshot dirs from removal
     assert CK.vacuum(base) == []
-    assert os.path.exists(f"{base}/snapshot=s0")
-    # vacuum removes exactly the two dead snapshots once the grace is off
+    assert os.path.exists(f"{base}/snapshot=s0/_schema.json")
+    # vacuum removes exactly the two dead snapshots once the grace is off,
+    # saved schema included
     assert CK.vacuum(base, grace_seconds=0) == ["s0", "s1"]
     assert not os.path.exists(f"{base}/snapshot=s0")
     assert os.path.exists(f"{base}/snapshot=sq0")
@@ -284,3 +286,120 @@ def test_squash_and_vacuum(spark, tmp_path):
     assert {
         (r.id, r.val) for r in CK.read_snapshot_as_of(spark, base, 300).collect()
     } == before_300
+
+
+def _inferred(spark, base, snapshot):
+    """A snapshot read with its schema inferred from the files."""
+    d = f"{base}/snapshot={snapshot}"
+    return spark.read.option("basePath", d).parquet(f"{d}/batch=*").drop("batch")
+
+
+def test_saved_schema_matches_inference(spark, tmp_path):
+    """read_snapshot with the schema saved at commit gives the schema and
+    rows inference gives — tile typed int for small values, long for large
+    ones; the file changes neither the parquet file set nor what an
+    outside reader (DuckDB) of the parquet files sees."""
+    import glob
+
+    import duckdb
+
+    base = str(tmp_path / "store")
+    for snap, off, tile_type in (("small", 0, "int"), ("large", 1 << 33, "bigint")):
+        df = spark.range(0, 300).select(
+            F.col("id"),
+            (F.col("id") * 3).alias("qt"),
+            F.lit(0).alias("changetype"),
+            (F.col("id") % 5 + off).alias("tile"),
+        )
+        CK.write_tiles_checkpointed(df, base, snap, n_batches=2)
+        assert os.path.exists(f"{base}/snapshot={snap}/_schema.json")
+        got, want = CK.read_snapshot(spark, base, snap), _inferred(spark, base, snap)
+        assert got.schema == want.schema
+        assert dict(got.dtypes)["tile"] == tile_type
+        rows = sorted(map(tuple, got.collect()))
+        assert rows == sorted(map(tuple, want.collect()))
+        assert len(rows) == 300
+
+        files = glob.glob(f"{base}/snapshot={snap}/batch=*/tile=*/*.parquet")
+        walked = [
+            os.path.join(r, f)
+            for r, _, fs in os.walk(f"{base}/snapshot={snap}")
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        assert sorted(walked) == sorted(files)
+        met = CK.read_metrics(spark, base, snap).agg(F.sum("bytes")).first()[0]
+        assert met == sum(os.path.getsize(f) for f in files)
+        duck = duckdb.sql(
+            f"SELECT id, qt, changetype, CAST(tile AS BIGINT) FROM read_parquet("
+            f"'{base}/snapshot={snap}/batch=*/tile=*/*.parquet', hive_partitioning = true)"
+        ).fetchall()
+        assert sorted(duck) == rows
+
+
+def test_interrupted_snapshot_reads_by_inference(spark, tmp_path):
+    """A snapshot stopped by fail_after_batch has no saved schema and still
+    reads its committed batches; the resumed write saves it."""
+    base = str(tmp_path / "store")
+    df = _assigned(spark, 3000)
+    CK.write_tiles_checkpointed(df, base, "s1", n_batches=4, fail_after_batch=1)
+    assert not os.path.exists(f"{base}/snapshot=s1/_schema.json")
+    part = CK.read_snapshot(spark, base, "s1")
+    assert part.schema == _inferred(spark, base, "s1").schema
+    assert part.count() == df.filter(F.col("tile") % 4 < 2).count()
+    CK.write_tiles_checkpointed(df, base, "s1", n_batches=4)
+    assert os.path.exists(f"{base}/snapshot=s1/_schema.json")
+    assert CK.read_snapshot(spark, base, "s1").count() == 3000
+
+
+def test_empty_commit(spark, tmp_path):
+    """A zero-row snapshot commits (schema from the input frame, empty
+    metrics table), and a log holding it reads exactly like one without."""
+    with_empty, without = str(tmp_path / "a"), str(tmp_path / "b")
+    _three_snap_store(spark, with_empty)
+    _three_snap_store(spark, without)
+    empty = spark.range(0, 10).select(
+        F.col("id"),
+        F.lit(0).cast("long").alias("changetype"),
+        F.lit(3).cast("long").alias("val"),
+        (F.col("id") % 4).alias("tile"),
+    ).filter(F.lit(False))
+    lineage = CK.write_tiles_checkpointed(empty, with_empty, "e", n_batches=2)
+    assert sorted(r["batch"] for r in lineage) == [0, 1]
+    CK.append_filelist(with_empty, "e", 200, "change")
+    assert CK.read_metrics(spark, with_empty, "e").count() == 0
+    assert CK.read_snapshot(spark, with_empty, "e").count() == 0
+
+    def rows(df):
+        return sorted((r.id, r.changetype, r.val, r.tile) for r in df.collect())
+
+    for ts in (200, 300):
+        assert rows(CK.read_snapshot_as_of(spark, with_empty, ts)) == rows(
+            CK.read_snapshot_as_of(spark, without, ts)
+        ), ts
+    for lo, hi in ((100, 200), (150, 200), (150, 300), (100, 300)):
+        assert rows(CK.read_changes_between(spark, with_empty, lo, hi)) == rows(
+            CK.read_changes_between(spark, without, lo, hi)
+        ), (lo, hi)
+
+
+def test_log_writes_are_atomic(spark, tmp_path, monkeypatch):
+    """The filelist (a snapshot's commit point) and the lineage log are
+    replaced whole: a write that dies midway leaves the old log readable."""
+    base = str(tmp_path / "store")
+    CK.append_filelist(base, "s0", 100, "base")
+    CK._append_lineage(base, "s0", {"batch": 0})
+
+    def dies_midway(obj, fh, **kw):
+        fh.write('[{"snapshot": "s')
+        raise OSError("disk full")
+
+    monkeypatch.setattr(json, "dump", dies_midway)
+    with pytest.raises(OSError):
+        CK.append_filelist(base, "s1", 200, "change")
+    with pytest.raises(OSError):
+        CK._append_lineage(base, "s0", {"batch": 1})
+    monkeypatch.undo()
+    assert CK.read_filelist(base) == [{"snapshot": "s0", "timestamp": 100, "kind": "base"}]
+    with open(f"{base}/_lineage/snapshot=s0.json") as fh:
+        assert json.load(fh) == [{"batch": 0}]

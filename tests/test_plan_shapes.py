@@ -231,3 +231,58 @@ def test_round4_ops_no_quadratic_or_single_partition(spark):
     # the only NLJ allowed anywhere is the <=9-row offsets broadcast
     for name in ("cooc", "top_frac", "hh", "annj"):
         assert "BroadcastNestedLoopJoin" not in plans[name], name
+
+
+def test_update_decision_table_single_pass(spark, tmp_path):
+    """The decision table reads its join + route frame once: each snapshot
+    of the as-of `stored` fold is scanned once, the route and encode UDFs
+    each cross into Python once, and a moved element yields its new-tile
+    row plus exactly one Remove tombstone.  The output schema is the one
+    the former row/tombstone union had."""
+    import oracle_qt as O
+    from osmquadtree_rust_spark.functions import qt_numpy as Q
+    from osmquadtree_rust_spark.functions import qt_spark as qs
+    from osmquadtree_rust_spark.operators.merge import CREATE, DELETE, MODIFY, REMOVE
+    from osmquadtree_rust_spark.plans import checkpoint as CK
+    from osmquadtree_rust_spark.plans.pipeline import make_route_udf
+    from osmquadtree_rust_spark.streaming import updates as U
+
+    a, b = O.from_string("A"), O.from_string("B")
+    route = make_route_udf(spark, np.array(sorted([a, b]), dtype=np.int64))
+    west = [(i, -900000000 + 1000 * i, 400000000) for i in range(1, 6)]
+    qts = Q.calculate_point(np.array([p[1] for p in west]), np.array([p[2] for p in west]))
+    base = str(tmp_path / "store")
+    rows = [(i, int(q), a, 0) for (i, _, _), q in zip(west, qts)]
+    for snap, ts, part in (("s0", 100, rows[:4]), ("s1", 200, rows[4:])):
+        df = spark.createDataFrame(part, "id long, qt long, tile long, changetype int")
+        CK.write_tiles_checkpointed(df, base, snap, n_batches=2)
+        CK.append_filelist(base, snap, ts, "base" if snap == "s0" else "change")
+    stored = CK.read_snapshot_as_of(spark, base, 200, keys=("tile", "id")).select(
+        "id", F.col("qt").alias("qt_old"), F.col("tile").alias("alloc")
+    )
+    changes = spark.createDataFrame(
+        [(1, MODIFY), (2, DELETE), (3, MODIFY), (6, CREATE)], "id long, changetype int"
+    )
+    moved_to = {1: (900000000, 400000000), 3: (-899996999, 400000000), 6: (800000000, 300000000)}
+    new_qts = qs.with_bbox_qt(
+        spark.createDataFrame(
+            [(i, x, y, x, y) for i, (x, y) in moved_to.items()],
+            "id long, minlon long, minlat long, maxlon long, maxlat long",
+        ),
+        "minlon", "minlat", "maxlon", "maxlat", "qt",
+    ).select("id", "qt")
+
+    delta = U.update_decision_table(changes, stored, new_qts, route)
+    got = sorted((r.id, r.tile, r.changetype) for r in delta.collect())
+    assert got == [
+        (1, a, REMOVE), (1, b, MODIFY), (2, a, DELETE), (3, a, MODIFY), (6, b, CREATE)
+    ]
+    assert delta.dtypes == [
+        ("id", "bigint"), ("tile", "bigint"), ("qt", "bigint"), ("changetype", "int")
+    ]
+    # after execution the adaptive plan string holds the final plan first,
+    # then the initial one.  The fold must read both snapshots, so two
+    # scans means each is scanned once
+    p = _plan(delta).split("== Initial Plan ==")[0]
+    assert p.count("FileScan parquet") == 2, p
+    assert p.count("ArrowEvalPython") == 2, p
