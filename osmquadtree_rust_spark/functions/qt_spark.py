@@ -33,10 +33,6 @@ from . import qt_sql as qsql
 # native (JVM codegen) integer ops
 # ---------------------------------------------------------------------------
 
-def qt_depth(c: str) -> Column:
-    return F.expr(qsql.qt_depth_sql(c)).cast("long")
-
-
 def qt_round(c: str, level: int) -> Column:
     return F.expr(qsql.qt_round_sql(c, level, qsql.SPARK))
 
@@ -73,18 +69,6 @@ def agg_lca(
     )
     return out.withColumn(alias, qt_common("__lca_mn", "__lca_mx")).drop(
         "__lca_mn", "__lca_mx"
-    )
-
-
-def qt_is_parent(a: str, b: str) -> Column:
-    """True when the shallower cell is an ancestor-or-self of the deeper
-    (quadtree.rs:460-469)."""
-    return F.expr(
-        f"(({a}) = ({b})) OR ("
-        f"  shiftleft(shiftright(CASE WHEN (({a})&31) <= (({b})&31) THEN ({b}) ELSE ({a}) END,"
-        f"    63 - 2*LEAST(({a})&31, ({b})&31)), 63 - 2*LEAST(({a})&31, ({b})&31))"
-        f"  + LEAST(({a})&31, ({b})&31)"
-        f") = (CASE WHEN (({a})&31) <= (({b})&31) THEN ({a}) ELSE ({b}) END)"
     )
 
 

@@ -33,10 +33,6 @@ def _shl(x: str, n, dialect: str) -> str:
     return f"(({x}) << ({n}))"
 
 
-def _i64(x: str, dialect: str) -> str:
-    return f"CAST({x} AS BIGINT)"
-
-
 def qt_depth_sql(c: str) -> str:
     """depth = low 5 bits (quadtree.rs:408-410); dialect-neutral."""
     return f"(({c}) & 31)"

@@ -85,9 +85,9 @@ def xyz_to_face_uv(x, y, z):
     ):
         m = face == f
         if m.any():
-            d = de()
-            u[m] = (ue() / d)[m]
-            v[m] = (ve() / d)[m]
+            d = de()[m]
+            u[m] = ue()[m] / d
+            v[m] = ve()[m] / d
     return face.astype(np.int64), u, v
 
 

@@ -23,6 +23,7 @@ from .functions import qt_spark as qs
 from .functions import qt_sql as qsql
 from .operators import merge as M
 from .sources import synth
+from .stages import pin, spread
 
 GATE: dict[str, dict] = {}
 
@@ -48,20 +49,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """_t plus a one-time spread to cluster parallelism, for gates whose
-    first heavy stage is a derived PROJECTION over the raw table (text
-    splits/shingles, synthetic md5 embeddings, regex scrubs): the bench
-    parquet files are single-row-group, so the scan gets ONE split and
-    everything pipelined with it runs on one core (measured: redact_pii
-    — a pure projection — spent its whole 3.6 s wall single-task at the
-    driver's SF).  The spread is conditional on the scan actually being
-    narrower than the cluster, so pre-split production inputs pay
-    nothing; scan-pushdown-sensitive gates keep using _t."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        df = df.repartition(par)
-    return df
+    """_t plus stages.spread, for gates whose first heavy stage is a
+    derived PROJECTION over the raw table (text splits/shingles,
+    synthetic md5 embeddings, regex scrubs): measured, redact_pii — a
+    pure projection — spent its whole 3.6 s wall single-task at sf1.0.
+    Scan-pushdown-sensitive gates keep using _t."""
+    return spread(_t(spark, sf_dir, name))
 
 
 # ===========================================================================
@@ -967,9 +960,8 @@ def _asof_updates(spark, sf_dir):
     )
     w = Window.partitionBy("user_id", "ets").orderBy(F.col("o_orderkey").desc())
     # pin the dedup window's stage (byte-coalesced to 1 task at sf1.0)
-    par = spark.sparkContext.defaultParallelism
     return (
-        u0.repartition(par, "user_id", "ets")
+        pin(u0, "user_id", "ets")
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .select("user_id", "ets", "price")

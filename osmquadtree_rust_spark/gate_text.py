@@ -36,6 +36,7 @@ _MM_CAP = 2500     # multimodal corpus (multimodal_neardup, cross_modal_audit)
 from .operators import dedup as D
 from .operators import similarity as SIM
 from .operators import text as TX
+from .stages import pin
 
 
 # ===========================================================================
@@ -1697,9 +1698,7 @@ def _qi8(spark, sf_dir):
     # no-cost-model pushdown trap) into a scan-stage filter, measured at
     # ~5 s vs ~1 s at the driver's SF.  q always has one entry per
     # embedding dimension, so outer emits identical rows.
-    out = SIM.quantize_int8(emb).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    out = pin(SIM.quantize_int8(emb))
     return out.select(
         F.col("vec_id").cast("long"),
         F.col("scale_ppm"),

@@ -11,28 +11,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def node_stats(nodes: DataFrame) -> DataFrame:
-    """count, id range, timestamp range, bbox (count.rs NodeCount)."""
-    aggs = [
-        F.count("*").alias("num"),
-        F.min("id").alias("min_id"),
-        F.max("id").alias("max_id"),
-    ]
-    if "timestamp" in nodes.columns:
-        aggs += [
-            F.min("timestamp").alias("min_ts"),
-            F.max("timestamp").alias("max_ts"),
-        ]
-    if "lon" in nodes.columns:
-        aggs += [
-            F.min("lon").alias("minlon"),
-            F.min("lat").alias("minlat"),
-            F.max("lon").alias("maxlon"),
-            F.max("lat").alias("maxlat"),
-        ]
-    return nodes.agg(*aggs)
-
-
 def way_stats(ways: DataFrame) -> DataFrame:
     """adds refs totals / max len / ref range (count.rs WayCount)."""
     aggs = [
@@ -47,20 +25,6 @@ def way_stats(ways: DataFrame) -> DataFrame:
     if "timestamp" in ways.columns:
         aggs += [F.min("timestamp").alias("min_ts"), F.max("timestamp").alias("max_ts")]
     return ways.agg(*aggs)
-
-
-def relation_stats(relations: DataFrame) -> DataFrame:
-    aggs = [
-        F.count("*").alias("num"),
-        F.min("id").alias("min_id"),
-        F.max("id").alias("max_id"),
-        F.sum(F.size("members")).alias("num_members"),
-        F.max(F.size("members")).alias("max_members_len"),
-        F.sum((F.size("members") == 0).cast("long")).alias("num_empty"),
-    ]
-    if "timestamp" in relations.columns:
-        aggs += [F.min("timestamp").alias("min_ts"), F.max("timestamp").alias("max_ts")]
-    return relations.agg(*aggs)
 
 
 def count_by_changetype(df: DataFrame) -> DataFrame:

@@ -13,20 +13,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
-
-
-def _pin(df: DataFrame, *cols: str) -> DataFrame:
-    """repartition by the downstream window/join key with an EXPLICIT
-    partition count (defaultParallelism — the cluster core count, never
-    a constant): the window/join needed this exact hash partitioning
-    anyway, so no extra exchange is added, but the explicit count is
-    exempt from AQE's byte-based coalescing, which otherwise collapses
-    these CPU-heavy sort/join stages onto 1-2 tasks once the compressed
-    shuffle is a few tens of MB (measured r8: the n-gram verify chain
-    spent ~21 s wall on 2 cores at the driver's SF).  At 100 TB the
-    shuffles exceed the advisory size and the pin is inert."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par, *cols)
+from ..stages import pin
 
 
 def dedup_exact(df: DataFrame, key: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -118,7 +105,7 @@ def ngram_jaccard_pairs(
     reused, so the whole word-hash subtree would recompute twice more
     (same pathology and fix as ngram_neardup_pairs)."""
     wh = word_hashes(df, text, id_col).distinct()
-    wh = _pin(wh, id_col).withColumn(
+    wh = pin(wh, id_col).withColumn(
         "__sz", F.count("*").over(Window.partitionBy(id_col))
     )
     la = wh.select(
@@ -166,21 +153,14 @@ def ngram_shingles(
     from .text import ngram_array, split_words
 
     base = df.select(F.col(id_col), split_words(text).alias("__ws"))
-    return (
-        base.select(
-            F.col(id_col), F.explode(ngram_array(F.col("__ws"), n)).alias("__sh")
-        )
-        .select(
-            F.col(id_col),
-            F.expr(TS.md5_prefix_int_sql("__sh", TS.SPARK)).alias("shh"),
-        )
-        # the distinct requires exactly this hash partitioning; the
-        # explicit pin only fixes its reduce-side task count (see _pin)
-        .repartition(
-            df.sparkSession.sparkContext.defaultParallelism, id_col, "shh"
-        )
-        .distinct()
+    sh = base.select(
+        F.col(id_col), F.explode(ngram_array(F.col("__ws"), n)).alias("__sh")
+    ).select(
+        F.col(id_col),
+        F.expr(TS.md5_prefix_int_sql("__sh", TS.SPARK)).alias("shh"),
     )
+    # the distinct requires exactly this hash partitioning
+    return pin(sh, id_col, "shh").distinct()
 
 
 def ngram_neardup_pairs(
@@ -224,18 +204,18 @@ def ngram_neardup_pairs(
             raise ValueError(f"df_cap={df_cap} must be >= 1")
         # hot-shingle drop first: sizes must count the CAPPED space
         sh = (
-            _pin(sh, "shh")
+            pin(sh, "shh")
             .withColumn("__df", F.count("*").over(Window.partitionBy("shh")))
             .filter(F.col("__df") <= df_cap)
             .drop("__df")
         )
-    sh = _pin(sh, id_col).withColumn(
+    sh = pin(sh, id_col).withColumn(
         "__sz", F.count("*").over(Window.partitionBy(id_col))
     )
     la = sh.select(F.col(id_col).alias("a"), "shh", F.col("__sz").alias("__sza"))
     lb = sh.select(F.col(id_col).alias("b"), "shh", F.col("__sz").alias("__szb"))
     inter = (
-        _pin(la, "shh").join(_pin(lb, "shh"), "shh")
+        pin(la, "shh").join(pin(lb, "shh"), "shh")
         .filter(F.col("a") < F.col("b"))
         .groupBy("a", "b")
         .agg(
@@ -305,7 +285,7 @@ def winnow_fingerprints(
     md5-prefix text, so the DuckDB oracle is the identical program."""
     if n < 1 or window < 1:
         raise ValueError(f"n={n} and window={window} must be >= 1")
-    sh = _pin(positional_shingles(df, text, id_col, n), id_col)
+    sh = pin(positional_shingles(df, text, id_col, n), id_col)
     wmin = (
         Window.partitionBy(id_col)
         .orderBy("pos")
@@ -443,7 +423,7 @@ def ngram_jaccard_on_pairs(
         if df_cap < 1:
             raise ValueError(f"df_cap={df_cap} must be >= 1")
         sh = (
-            _pin(sh, "shh")
+            pin(sh, "shh")
             .withColumn("__df", F.count("*").over(Window.partitionBy("shh")))
             .filter(F.col("__df") <= df_cap)
             .drop("__df")
@@ -452,7 +432,7 @@ def ngram_jaccard_on_pairs(
         F.explode(F.array(F.col("a"), F.col("b"))).alias(id_col)
     ).distinct()
     sh = sh.join(ids, id_col, "left_semi")
-    sh = _pin(sh, id_col).withColumn(
+    sh = pin(sh, id_col).withColumn(
         "__sz", F.count("*").over(Window.partitionBy(id_col))
     )
     la = sh.select(F.col(id_col).alias("a"), "shh", F.col("__sz").alias("__sza"))
@@ -510,18 +490,18 @@ def ngram_containment_pairs(
         if df_cap < 1:
             raise ValueError(f"df_cap={df_cap} must be >= 1")
         sh = (
-            _pin(sh, "shh")
+            pin(sh, "shh")
             .withColumn("__df", F.count("*").over(Window.partitionBy("shh")))
             .filter(F.col("__df") <= df_cap)
             .drop("__df")
         )
-    sh = _pin(sh, id_col).withColumn(
+    sh = pin(sh, id_col).withColumn(
         "__sz", F.count("*").over(Window.partitionBy(id_col))
     )
     la = sh.select(F.col(id_col).alias("a"), "shh", F.col("__sz").alias("__sza"))
     lb = sh.select(F.col(id_col).alias("b"), "shh", F.col("__sz").alias("__szb"))
     inter = (
-        _pin(la, "shh").join(_pin(lb, "shh"), "shh")
+        pin(la, "shh").join(pin(lb, "shh"), "shh")
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.count("*").alias("__i"), F.max("__sza").alias("__sza"))
@@ -814,20 +794,6 @@ def _banded_pair_join(banded: DataFrame) -> DataFrame:
     )
 
 
-def simhash_band_candidates(
-    sigs: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    m_blocks: int | None = None,
-) -> DataFrame:
-    """Candidate pairs (a < b) whose signatures agree on at least one
-    band key (see _simhash_banded for the (m_blocks, max_hamming)
-    pigeonhole construction and its completeness argument).  One explode +
-    one equi-join on (key_idx, key_val) — no cross product anywhere."""
-    banded = _simhash_banded(sigs, max_hamming, id_col, m_blocks)
-    return _banded_pair_join(banded).select("a", "b").distinct()
-
-
 def simhash_neardup_pairs(
     sigs: DataFrame,
     max_hamming: int = 3,
@@ -964,7 +930,7 @@ def shared_span_pairs(
     # split/shingle/md5 build via the runtime stage cache instead of
     # re-running it per side (measured: 2 of the 3 heaviest stages of
     # the shared_spans gate were byte-identical shingle builds)
-    psh = _pin(psh.join(ids, id_col, "left_semi"), id_col)
+    psh = pin(psh.join(ids, id_col, "left_semi"), id_col)
     pa = psh.select(
         F.col(id_col).alias("a"), F.col("pos").alias("__pa"), "shh"
     )
@@ -978,7 +944,7 @@ def shared_span_pairs(
         .withColumn("__diag", F.col("__pa") - F.col("__pb"))
     )
     w = Window.partitionBy("a", "b", "__diag").orderBy("__pa")
-    isl = _pin(m, "a", "b", "__diag").withColumn(
+    isl = pin(m, "a", "b", "__diag").withColumn(
         "__grp", F.col("__pa") - F.row_number().over(w)
     )
     return (

@@ -37,16 +37,6 @@ def bbox_contains_point(bbox, lon="lon", lat="lat"):
     )
 
 
-def bbox_overlaps(bbox, minlon="minlon", minlat="minlat", maxlon="maxlon", maxlat="maxlat"):
-    a, b, c, d = bbox
-    return (
-        (F.lit(a) <= F.col(maxlon))
-        & (F.lit(b) <= F.col(maxlat))
-        & (F.col(minlon) <= c)
-        & (F.col(minlat) <= d)
-    )
-
-
 # ---------------------------------------------------------------------------
 # polygon PIP (filter_elements.rs:89-129)
 # ---------------------------------------------------------------------------

@@ -427,14 +427,18 @@ def quantize_int8(
     Everything is native JVM higher-order functions; scale rides along as
     scale_ppm = FLOOR(scale * 1e6) for engine-exact comparison.
 
-    NULL / NaN elements raise (CASE->raise_error inside the __amax
-    projection, same loud-guard pattern as check_dim): abs/array_max would
-    otherwise propagate NaN into __amax, every quantized component would
-    go NULL, and downstream int8 verifies silently drop those rows."""
+    NULL / NaN elements and zero-length vectors raise (CASE->raise_error
+    inside the __amax projection, same loud-guard pattern as check_dim):
+    abs/array_max would otherwise propagate NaN into __amax, every
+    quantized component would go NULL, and downstream int8 verifies
+    silently drop those rows; an empty vector's array_max is NULL, and
+    the gate's posexplode_outer would emit a NULL dim/qv row for it."""
     amax = F.expr(
-        f"CASE WHEN {vec_col} IS NULL "
+        f"CASE WHEN {vec_col} IS NULL OR size({vec_col}) = 0 "
         f"OR exists({vec_col}, x -> x IS NULL OR isnan(CAST(x AS DOUBLE))) "
-        f"THEN CAST(raise_error('quantize_int8: NULL/NaN embedding element') AS DOUBLE) "
+        "THEN CAST(raise_error("
+        "'quantize_int8: NULL/NaN embedding element or empty embedding'"
+        ") AS DOUBLE) "
         f"ELSE array_max(transform({vec_col}, x -> abs(CAST(x AS DOUBLE)))) END"
     )
     q = F.when(F.col("__amax") == 0.0, F.transform(F.col(vec_col), lambda x: F.lit(0).cast("long"))).otherwise(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..stages import pin
 from .filter import pnpoly
 
 
@@ -281,7 +282,7 @@ def auto_radius_grid(
 
     if int(d_fixed) <= 0:
         raise ValueError(f"d_fixed={d_fixed} must be positive")
-    best: tuple[int, int, int] | None = None  # (area_key, chars, ring)
+    best: tuple[int, int, int] | None = None  # (area, ring, chars)
     for c in range(1, int(max_chars) + 1):
         lon_bits, lat_bits = GH._bits_for(c)
         span_lon = 3600000000 // (1 << lon_bits)
@@ -296,14 +297,14 @@ def auto_radius_grid(
         if w > (1 << lon_bits):  # modular ring would wrap onto itself
             continue
         area = (w * span_lon) * (w * span_lat)
-        if best is None or (area, ring) < (best[0][0], best[0][1]):
-            best = ((area, ring), c, ring)
+        if best is None or (area, ring) < best[:2]:
+            best = (area, ring, c)
     if best is None:
         raise ValueError(
             f"d_fixed={d_fixed} admits no (chars, ring) grid under "
             f"max_block_cells={max_block_cells}"
         )
-    return best[1], best[2]
+    return best[2], best[1]
 
 
 def qt_neighbors(
@@ -467,16 +468,17 @@ def _radius_join_impl(
             f"exactly-once-match invariant needs alias-free x offsets"
         )
     spark = points.sparkSession
-    par = spark.sparkContext.defaultParallelism
     lon_bits, lat_bits = GH._bits_for(chars)
     xs, ys = GH.geohash_xy_sql(lon, lat, chars, "spark")
-    proj = points.select(
-        F.col(id_col).alias("a"),
-        F.col(lon).alias("__alon"),
-        F.col(lat).alias("__alat"),
-        F.expr(xs).alias("__x"),
-        F.expr(ys).alias("__y"),
-    ).repartition(par)
+    proj = pin(
+        points.select(
+            F.col(id_col).alias("a"),
+            F.col(lon).alias("__alon"),
+            F.col(lat).alias("__alat"),
+            F.expr(xs).alias("__x"),
+            F.expr(ys).alias("__y"),
+        )
+    )
     # the repartition MATERIALIZES the coordinate projection before the
     # (2*ring+1)^2 offsets fan-out: caller-supplied lon/lat are often
     # derived expressions (the gates derive points from hashes), and
@@ -484,8 +486,7 @@ def _radius_join_impl(
     # EXPLODED row on the scan's few input splits (measured: 87 CPU-s of
     # hash re-derivation on 2 tasks at the driver's SF — the entire
     # query wall).  Both join sides consume the SAME exchange, which the
-    # AQE stage cache evaluates once; par=defaultParallelism keeps the
-    # fan-out stage at cluster parallelism.
+    # AQE stage cache evaluates once.
     if cache:
         proj = proj.persist()
     # the join key is the (x, y) grid cell DIRECTLY — interleaving into
@@ -517,17 +518,12 @@ def _radius_join_impl(
     wl = F.least(dl, F.lit(3600000000) - dl)
     da = F.abs(F.col("__alat") - F.col("__blat"))
     # the cell join EXPLODES (output pairs >> input points) and is
-    # pipelined with the distance verify, so its stage must run at
-    # cluster parallelism: AQE's byte-based coalescing sees only the
-    # tiny pre-join shuffle and would collapse it to 1-2 tasks
-    # (measured: the sf1.0 metric-join verify ran on 2 cores).  An
-    # explicit repartition by the join key pins the partition count —
-    # scale-adaptively, defaultParallelism is the cluster core count —
-    # and both sides share the partitioning, so the join itself adds
-    # no exchange beyond the one it always needed.
+    # pipelined with the distance verify behind a tiny pre-join
+    # shuffle, so its stage is pinned (measured unpinned: the sf1.0
+    # metric-join verify ran on 2 cores)
     pairs = (
-        own.repartition(par, "__cx", "__cy")
-        .join(bset.repartition(par, "__cx", "__cy"), ["__cx", "__cy"])
+        pin(own, "__cx", "__cy")
+        .join(pin(bset, "__cx", "__cy"), ["__cx", "__cy"])
         .filter(F.col("a") < F.col("b"))
         .withColumn("dist_sq", (wl * wl + da * da).cast("long"))
         .filter(F.col("dist_sq") <= int(d_fixed) * int(d_fixed))

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..stages import pin
+
 
 def asof_join(
     events: DataFrame,
@@ -98,16 +100,11 @@ def asof_join(
         .orderBy(F.col(ts), F.col("__is_evt"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    # pin the keyed window's stage at cluster parallelism: the window
-    # is CPU-heavy (per-key sort of events+updates) and AQE's
-    # byte-based coalescing of the small union shuffle would run it on
-    # 1-2 tasks (measured at the driver's SF); the explicit
-    # repartition-by-key satisfies the window's required distribution,
-    # so no extra exchange is added
-    par = events.sparkSession.sparkContext.defaultParallelism
+    # pin the keyed window's stage: the per-key sort of events+updates
+    # is CPU-heavy and its union shuffle small (1-2 tasks unpinned,
+    # measured at sf1.0)
     filled = (
-        tagged_e.unionByName(tagged_u)
-        .repartition(par, key)
+        pin(tagged_e.unionByName(tagged_u), key)
         .withColumn("__upd", F.last("__upd", ignorenulls=True).over(w))
     )
     def out_col(c):
@@ -220,9 +217,8 @@ def asof_join_bucketed(
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     # same stage-parallelism pin as the main window below
-    par0 = events.sparkSession.sparkContext.defaultParallelism
     seeds = (
-        domain.repartition(par0, key)
+        pin(domain, key)
         .withColumn(
             "__carry",
             F.max_by(F.col("__last"), F.col("__last.__t")).over(wcarry),
@@ -270,11 +266,8 @@ def asof_join_bucketed(
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # same stage-parallelism pin as asof_join (see there)
-    par = events.sparkSession.sparkContext.defaultParallelism
     filled = (
-        tagged_e.unionByName(tagged_u)
-        .unionByName(tagged_s)
-        .repartition(par, key, "__bkt")
+        pin(tagged_e.unionByName(tagged_u).unionByName(tagged_s), key, "__bkt")
         .withColumn("__upd", F.last("__upd", ignorenulls=True).over(w))
     )
     def out_col(c):

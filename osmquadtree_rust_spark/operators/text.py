@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
+from ..stages import pin
 
 
 def with_token_count(df: DataFrame, text: str = "text", out: str = "n_tokens") -> DataFrame:
@@ -779,10 +780,7 @@ def token_cooccurrence(
     split_words construction."""
     if window < 1:
         raise ValueError(f"window={window} must be >= 1")
-    par = df.sparkSession.sparkContext.defaultParallelism
-    base = df.select(F.col(id_col), split_words(text).alias("__ws")).repartition(
-        par
-    )
+    base = pin(df.select(F.col(id_col), split_words(text).alias("__ws")))
     # offsets capped at size-1: Spark's sequence(a, b) steps DOWNWARD
     # when b < a, so an unguarded off > size-1 would fabricate pairs
     pair_arr = (
@@ -846,24 +844,20 @@ def top_k_per_group(
         F.col(order).asc() if ascending else F.col(order).desc(),
         F.col(id_col).asc(),
     )
-    # both window stages pinned at cluster parallelism (explicit
-    # repartition by the window's own partition key — no extra exchange,
-    # just a partition count AQE's byte-based coalescing cannot shrink:
-    # the metric-kNN ranking window measured 4 tasks over 12M rows at
-    # the driver's SF before the pin)
-    par = df.sparkSession.sparkContext.defaultParallelism
+    # both window stages pinned (the metric-kNN ranking window
+    # measured 4 tasks over 12M rows at sf1.0 before the pin)
     if salt_buckets > 1:
         salt = F.pmod(F.hash(F.col(id_col)), F.lit(int(salt_buckets)))
         w1 = Window.partitionBy(F.col(group), salt).orderBy(*ordering)
         df = (
-            df.repartition(par, F.col(group), salt)
+            pin(df, F.col(group), salt)
             .withColumn("__lrk", F.row_number().over(w1))
             .filter(F.col("__lrk") <= k)
             .drop("__lrk")
         )
     w = Window.partitionBy(group).orderBy(*ordering)
     return (
-        df.repartition(par, group)
+        pin(df, group)
         .withColumn(out, F.row_number().over(w))
         .filter(F.col(out) <= k)
     )
@@ -1009,10 +1003,8 @@ def with_bigram_surprisal(
     )
     if reserved:
         raise ValueError(f"column(s) {sorted(reserved)} already exist")
-    par = df.sparkSession.sparkContext.defaultParallelism
     bg = (
-        df.select(F.col(id_col), split_words(text).alias("__ws"))
-        .repartition(par)
+        pin(df.select(F.col(id_col), split_words(text).alias("__ws")))
         .filter(F.size("__ws") >= 2)
         .select(F.col(id_col), F.explode(F.expr(_BIGRAM_EXPR)).alias("__b"))
         .select(id_col, F.col("__b.w1").alias("w1"), F.col("__b.w2").alias("w2"))
@@ -1023,14 +1015,12 @@ def with_bigram_surprisal(
     # the doc-bigram subtree once per consumer — measured: the shared
     # exchange was NOT reused at runtime and the whole explode ran
     # twice.  HashPartitioning(w1) satisfies both windows' clustering
-    # ((w1) and (w1, w2)), so the explicit pin adds exactly one
-    # exchange and both window sorts run at cluster parallelism (the
-    # vocabulary-sized shuffle would otherwise byte-coalesce to one
-    # task).  Hot-word caveat: a Zipf-head w1 concentrates its
+    # ((w1) and (w1, w2)), so the pin adds exactly one exchange for
+    # both window sorts.  Hot-word caveat: a Zipf-head w1 concentrates its
     # (doc, bigram) rows on one task — bounded by docs*distinct-w2 for
     # that word, the usual keyed-token skew class.
     scored = (
-        dbc.repartition(par, "w1")
+        pin(dbc, "w1")
         .withColumn("__c12", F.sum("__n").over(Window.partitionBy("w1", "w2")))
         .withColumn("__c1", F.sum("__n").over(Window.partitionBy("w1")))
         .withColumn(

@@ -35,6 +35,7 @@ from pyspark.sql.types import LongType
 
 from ..functions import geodesic as GEO
 from ..functions import parse as PARSE
+from ..stages import pin
 
 # floor(sqrt(hav) * CHORD_MM_LIT) == chord length in whole millimetres:
 # chord = 2R*sin(d/2R) = 2R*sqrt(hav).  One literal, one mul — pinned.
@@ -781,14 +782,11 @@ def _track_hausdorff_plan(
         chars, "spark",
     )
     # the cell join explodes (up to per-cell population² pair rows from
-    # entity-count-sized inputs): pin its stage at cluster parallelism
-    # so AQE's byte-based coalescing of the tiny pre-join shuffle
-    # cannot collapse the exploding stage to 1-2 tasks (see
-    # _radius_join_impl — same measured trap)
-    par = events.sparkSession.sparkContext.defaultParallelism
+    # entity-count-sized inputs) behind a tiny pre-join shuffle: pin
+    # its stage (see _radius_join_impl — same measured trap)
     cand = (
-        a.repartition(par, "__cx", "__cy")
-        .join(b.repartition(par, "__cx", "__cy"), ["__cx", "__cy"])
+        pin(a, "__cx", "__cy")
+        .join(pin(b, "__cx", "__cy"), ["__cx", "__cy"])
         .filter(F.col("__ua") < F.col("__ub"))
         .filter(
             (F.col("__aminx") <= F.col("__bmaxx"))
@@ -820,7 +818,7 @@ def _track_hausdorff_plan(
     # re-spread the pair frame by its own key so the |A|·|B| numpy
     # stage runs evenly at cluster parallelism
     ranked = (
-        cand.repartition(par, "__ua", "__ub")
+        pin(cand, "__ua", "__ub")
         .join(arr_a, "__ua")
         .join(arr_b, "__ub")
         .select(

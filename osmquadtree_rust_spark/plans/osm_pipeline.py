@@ -49,13 +49,3 @@ def tile_elements(
         eq.withColumn("w", weight), "qt", "w", target, graph_level
     )
     return assigned.select("etype", "id", "qt", "tile"), groups
-
-
-def write_element_tiles(assigned: DataFrame, path: str) -> None:
-    (
-        assigned.repartition(F.col("tile"))
-        .sortWithinPartitions("etype", "id")
-        .write.mode("overwrite")
-        .partitionBy("tile")
-        .parquet(path)
-    )

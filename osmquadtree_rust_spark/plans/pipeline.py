@@ -30,6 +30,7 @@ from ..functions import qt_numpy as qtn
 from ..functions import qt_spark as qs
 from ..operators import tiles as T
 from ..sources.synth import synth_geo_exprs
+from ..stages import cores
 
 DEFAULT_TARGET = 40000  # reference utils/src/commands/sortblocks.rs:30-31
 
@@ -216,7 +217,7 @@ def write_tiles(
         # otherwise merge the salted splits right back into one task
         n_parts = max(
             sum(hot.values()) + max(len(tile_weights) - len(hot), 1),
-            df.sparkSession.sparkContext.defaultParallelism,
+            cores(df),
         )
         salted = salted.repartition(
             n_parts, F.col(tile_col), F.col("__salt")

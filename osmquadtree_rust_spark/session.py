@@ -40,15 +40,10 @@ def get_spark(
         # 3.5->7.2 s, raster/route/pack families 2-3x) and outweighs its
         # wins on window/UDF-heavy queries.  Queries the byte target
         # genuinely under-parallelizes (exploding candidate joins,
-        # CPU-heavy keyed windows) pin their own stage parallelism with
-        # explicit repartition-by-key instead (spatial_join, temporal,
-        # dedup).  At 100 TB partitions exceed the advisory size and
-        # both settings behave identically;
-        # SPARK_GRAFT_PARALLELISM_FIRST overrides for experiments.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            os.environ.get("SPARK_GRAFT_PARALLELISM_FIRST", "false"),
-        )
+        # CPU-heavy keyed windows) pin their own stage parallelism
+        # instead (stages.py).  At 100 TB partitions exceed the advisory
+        # size and both settings behave identically.
+        .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")

@@ -80,20 +80,3 @@ def synth_geo_exprs(id_col: str = "id") -> dict[str, str]:
         "maxlon": f"LEAST(({lon}) + {FOOTPRINT_SCALE} * {w} * {mult}, 1800000000)",
         "maxlat": f"LEAST(({lat}) + {FOOTPRINT_SCALE} * {h} * {mult}, 900000000)",
     }
-
-
-def synth_geo_select(base_sql: str, id_col: str = "id", extra: str = "") -> str:
-    """`SELECT id, lon, lat, w, h, minlon.. FROM (base_sql)` in either
-    dialect."""
-    e = synth_geo_exprs(id_col)
-    cols = ", ".join(f"{expr} AS {name}" for name, expr in e.items())
-    ex = f", {extra}" if extra else ""
-    return f"SELECT {id_col} AS img_id, {cols}{ex} FROM ({base_sql}) __synth"
-
-
-def duckdb_range_sql(n: int) -> str:
-    return f"SELECT range AS id FROM range({n})"
-
-
-def spark_range_sql(n: int) -> str:
-    return f"SELECT id FROM range({n})"

@@ -286,3 +286,47 @@ def test_update_decision_table_single_pass(spark, tmp_path):
     p = _plan(delta).split("== Initial Plan ==")[0]
     assert p.count("FileScan parquet") == 2, p
     assert p.count("ArrowEvalPython") == 2, p
+
+
+def _exchanges(df) -> list[str]:
+    return [ln for ln in _plan(df).splitlines() if "Exchange" in ln]
+
+
+def test_stage_pin_fixes_exchange_count(spark):
+    """pin(df, k) IS the exchange the window on k needs, at the core
+    count; pin(df) is one round-robin spread to the core count."""
+    import re
+
+    from pyspark.sql import Window
+
+    from osmquadtree_rust_spark.stages import pin
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(200).withColumn("k", F.col("id") % 7)
+    ranked = pin(df, "k").withColumn(
+        "r", F.row_number().over(Window.partitionBy("k").orderBy("id"))
+    )
+    ex = _exchanges(ranked)
+    assert len(ex) == 1, ex
+    assert re.search(rf"hashpartitioning\(k#\d+L?, {par}\)", ex[0]), ex
+
+    ex = _exchanges(pin(df))
+    assert len(ex) == 1 and f"RoundRobinPartitioning({par})" in ex[0], ex
+
+
+def test_stage_spread_only_widens_narrow_scans(spark, tmp_path):
+    from osmquadtree_rust_spark.stages import spread
+
+    par = spark.sparkContext.defaultParallelism
+    one = str(tmp_path / "one")
+    spark.range(200).coalesce(1).write.parquet(one)
+    narrow = spark.read.parquet(one)
+    assert narrow.rdd.getNumPartitions() < par
+    ex = _exchanges(spread(narrow))
+    assert len(ex) == 1 and f"RoundRobinPartitioning({par})" in ex[0], ex
+
+    many = str(tmp_path / "many")
+    spark.range(200).repartition(par).write.parquet(many)
+    wide = spark.read.parquet(many)
+    assert wide.rdd.getNumPartitions() >= par
+    assert _exchanges(spread(wide)) == []

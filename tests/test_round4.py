@@ -55,12 +55,13 @@ def test_topk_rejects_bad_params(spark):
 def test_quantize_int8_raises_on_nan(spark):
     from osmquadtree_rust_spark.operators.similarity import quantize_int8
 
-    df = spark.createDataFrame(
-        [(1, [0.5, float("nan")]), (2, [0.1, 0.2])],
-        "vec_id long, embedding array<double>",
-    )
-    with pytest.raises(Exception, match="NULL/NaN embedding element"):
-        quantize_int8(df).collect()
+    for bad in ([0.5, float("nan")], []):
+        df = spark.createDataFrame(
+            [(1, bad), (2, [0.1, 0.2])],
+            "vec_id long, embedding array<double>",
+        )
+        with pytest.raises(Exception, match="NULL/NaN embedding element"):
+            quantize_int8(df).collect()
 
 
 def test_quantize_int8_raises_on_null_element(spark):

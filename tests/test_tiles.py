@@ -3,6 +3,7 @@
 import numpy as np
 
 import oracle_qt as O
+import tiles_walk as W
 from osmquadtree_rust_spark.functions import qt_numpy as Q
 from osmquadtree_rust_spark.operators import tiles as T
 
@@ -138,7 +139,7 @@ def test_vectorized_groups_match_walk_port_seeded_net():
         ta = T.build_tree_from_histogram(vals, counts)
         tb = T.build_tree_from_histogram(vals, counts)
         got = sorted(T.find_tree_groups(ta, target, absmin).leaves())
-        exp = sorted(T.find_tree_groups_walk(tb, target, absmin).leaves())
+        exp = sorted(W.find_tree_groups_walk(tb, target, absmin).leaves())
         assert got == exp, f"seed={seed} target={target} absmin={absmin}"
 
 
@@ -157,7 +158,7 @@ def test_vectorized_divergence_guard_matches_walk():
     cells = Q.qt_round(Q.calculate_point(lon, lat), 17)
     vals, counts = np.unique(cells, return_counts=True)
     assert (vals & 31).min() == 17 and counts.sum() > 300
-    for fn in (T.find_tree_groups, T.find_tree_groups_walk):
+    for fn in (T.find_tree_groups, W.find_tree_groups_walk):
         tree = T.build_tree_from_histogram(vals.tolist(), counts.tolist())
         with pytest.raises(RuntimeError, match="diverging"):
             fn(tree, 300, 150, max_sweeps=40)
