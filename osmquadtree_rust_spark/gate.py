@@ -23,6 +23,7 @@ from .functions import qt_spark as qs
 from .functions import qt_sql as qsql
 from .operators import merge as M
 from .sources import synth
+from .session import local_frame
 from .stages import pin, spread
 
 GATE: dict[str, dict] = {}
@@ -881,7 +882,7 @@ def _rqf(spark, sf_dir):
         END"""
     )
     relations = o.select(F.col("k").alias("id"), members.alias("members"))
-    wqts = spark.createDataFrame([], "id long, qt long")
+    wqts = local_frame(spark, [], "id long, qt long")
     rq = CQ.rel_qts(relations, nqts, wqts, spark)
     return rq.select(F.col("id").cast("long"), F.col("qt").cast("long"))
 

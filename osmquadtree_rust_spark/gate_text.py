@@ -36,6 +36,7 @@ _MM_CAP = 2500     # multimodal corpus (multimodal_neardup, cross_modal_audit)
 from .operators import dedup as D
 from .operators import similarity as SIM
 from .operators import text as TX
+from .session import local_frame
 from .stages import pin
 
 
@@ -5034,8 +5035,8 @@ def _fss(spark, sf_dir):
     from .operators import multimodal as MM
     from .sources import fixtures as FX
 
-    vdf = spark.createDataFrame(
-        FX.synth_video_rows(_VID_N), "video_id string, bytes binary"
+    vdf = local_frame(
+        spark, FX.synth_video_rows(_VID_N), "video_id string, bytes binary"
     )
     frames = MM.sample_frames(vdf, every_n=_VID_EVERY)
     imgs = frames.select(
@@ -5104,8 +5105,8 @@ def _fds(spark, sf_dir):
     from .operators import multimodal as MM
     from .sources import fixtures as FX
 
-    vdf = spark.createDataFrame(
-        FX.synth_video_rows(_VID_N), "video_id string, bytes binary"
+    vdf = local_frame(
+        spark, FX.synth_video_rows(_VID_N), "video_id string, bytes binary"
     )
     return MM.frame_diff_stats(vdf).select(
         F.col("video_id"),
@@ -5156,8 +5157,8 @@ def _afs(spark, sf_dir):
     from .operators import multimodal as MM
     from .sources import fixtures as FX
 
-    adf = spark.createDataFrame(
-        FX.synth_audio_rows(_AUD_N), "audio_id string, bytes binary"
+    adf = local_frame(
+        spark, FX.synth_audio_rows(_AUD_N), "audio_id string, bytes binary"
     )
     out = MM.audio_features(adf)
     return out.select(

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
+from ..session import local_frame
 
 _PAIRS_EXPR = (
     "transform(sequence(0, size(__sy) - 2), "
@@ -99,8 +100,8 @@ def learn_bpe_merges(
         cur.unpersist()
         cur = nxt
     cur.unpersist()
-    return spark.createDataFrame(
-        merges, "rk long, left string, right string, pair_count long"
+    return local_frame(
+        spark, merges, "rk long, left string, right string, pair_count long"
     )
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..functions import qt_numpy as qtn
 from ..functions import qt_spark as qs
+from ..session import local_frame
 
 
 def way_node_edges(ways: DataFrame) -> DataFrame:
@@ -143,9 +144,7 @@ def rel_qts(
         # via a broadcast semi-join + Arrow (toPandas), not isin(list).
         touched = sorted({a for a, _ in relrels} | {b for _, b in relrels})
         a_ids = {a for a, _ in relrels}
-        touched_df = spark.createDataFrame(
-            [(t,) for t in touched], "rel_id long"
-        )
+        touched_df = local_frame(spark, [(t,) for t in touched], "rel_id long")
         # NULL qt rows must be dropped SPARK-side: a single NULL makes
         # pandas promote the whole int64 qt column to float64, and int(v)
         # then silently corrupts every qt using bits above 2^53 (qt packs
@@ -167,11 +166,12 @@ def rel_qts(
                     # calculate.rs:829-834: missing parent on the last pass
                     # contributes cell 0
                     state[a] = 0 if a not in state else qtn.common_scalar(state[a], 0)
-        updated = spark.createDataFrame(
+        updated = local_frame(
+            spark,
             [(int(k), int(v)) for k, v in state.items() if k in a_ids],
             "rel_id long, qt long",
         )
-        a_df = spark.createDataFrame([(a,) for a in sorted(a_ids)], "rel_id long")
+        a_df = local_frame(spark, [(a,) for a in sorted(a_ids)], "rel_id long")
         out = base.join(F.broadcast(a_df), "rel_id", "left_anti").unionByName(
             updated
         )

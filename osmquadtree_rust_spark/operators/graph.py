@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def pagerank(
     edges: DataFrame,
@@ -110,7 +112,7 @@ def pagerank(
     if n == 0:
         _drop(deg, deg_path)
         _drop(e, e_path)
-        return spark.createDataFrame([], "node long, pr long")
+        return local_frame(spark, [], "node long, pr long")
     init = int(scale) // n
     base = (damp_den - damp_num) * int(scale) // (damp_den * n)
     pr, pr_path = _ckpt(deg.withColumn("pr", F.lit(init).cast("long")))

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import qt_numpy as qtn
+from ..session import local_frame
 
 
 def dist_sq_col(qlon: int, qlat: int, lon: str = "lon", lat: str = "lat"):
@@ -115,6 +116,4 @@ def knn_search(
             d_edge = max(d_edge - 2, 0)
             if best[-1][0] <= float(d_edge) * float(d_edge):
                 break
-    return spark.createDataFrame(
-        [(i, d) for d, i in best], "id long, dist_sq double"
-    )
+    return local_frame(spark, [(i, d) for d, i in best], "id long, dist_sq double")

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text_sql import SPARK, bpe_token_count_sql
+from ..session import local_frame
 
 
 def pack_sequences(
@@ -126,7 +127,7 @@ def pack_sequences(
         StructField("__off", LongType(), False)
     )
     spark = docs.sparkSession
-    odf = spark.createDataFrame(offs, sch)
+    odf = local_frame(spark, offs, sch)
     # Null-safe join: a NULL group is a valid window partition, and a
     # plain equi-join would silently drop it.
     onames = [f"__o{i}" for i in range(len(gcols))]

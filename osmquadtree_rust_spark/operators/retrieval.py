@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import split_words, top_k_per_group
 
 _IDF_SCALE = 64 * 44000  # worst-case numerator factor ahead of T*tf
@@ -77,8 +78,8 @@ def bm25_topk(
     if total == 0:
         tf.unpersist()
         spark = docs.sparkSession
-        return spark.createDataFrame(
-            [], f"{qid_col} long, {id_col} long, score_ppk long, rk long"
+        return local_frame(
+            spark, [], f"{qid_col} long, {id_col} long, score_ppk long, rk long"
         )
     max_tf = (2**63 - 1) // (_IDF_SCALE * total)
     if max_tf < 1:

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
+from ..session import local_frame
 
 
 def shard_assignments(
@@ -76,7 +77,7 @@ def shard_assignments(
         offs.append((int(b), int(run)))
         run += int(n)
     spark = df.sparkSession
-    odf = spark.createDataFrame(offs, "__bkt long, __off long")
+    odf = local_frame(spark, offs, "__bkt long, __off long")
     w = Window.partitionBy("__bkt").orderBy("__h", id_col)
     return (
         d.join(F.broadcast(odf), "__bkt")

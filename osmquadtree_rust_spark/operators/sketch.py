@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
+from ..session import local_frame
 from .dedup import word_hashes
 
 DEFAULT_DEPTH = 4
@@ -138,7 +139,8 @@ def heavy_hitters(
         raise ValueError(f"threshold={threshold} must be >= 1")
     spark = df.sparkSession
     sketch_rows = count_min_sketch(df, text, id_col, depth, width).collect()
-    sk = spark.createDataFrame(
+    sk = local_frame(
+        spark,
         [(int(r["d"]), int(r["bucket"]), int(r["cnt"])) for r in sketch_rows]
         or [(0, -1, 0)],  # typed placeholder for an empty corpus
         "d long, bucket long, cnt long",

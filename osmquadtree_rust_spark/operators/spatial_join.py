@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..session import local_frame
 from ..stages import pin
 from .filter import pnpoly
 
@@ -200,7 +201,8 @@ def geohash_neighbors(
         F.expr(xs).alias("__x"),
         F.expr(ys).alias("__y"),
     )
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         [(k, dx, dy) for k, (dx, dy) in enumerate(ring_offsets(ring))],
         "k int, dx int, dy int",
     )
@@ -363,7 +365,8 @@ def qt_neighbors(
         F.expr(guard_x).alias("__x"),
         F.expr(ys).alias("__y"),
     )
-    offsets = spark.createDataFrame(
+    offsets = local_frame(
+        spark,
         [(k, dx, dy) for k, (dx, dy) in enumerate(ring_offsets(ring))],
         "k int, dx int, dy int",
     )
@@ -499,7 +502,7 @@ def _radius_join_impl(
     )
     # full block including the center cell — one broadcast join, no union
     block = [(0, 0)] + ring_offsets(ring)
-    offsets = spark.createDataFrame(block, "dx int, dy int")
+    offsets = local_frame(spark, block, "dx int, dy int")
     m = 1 << lon_bits
     xn = f"pmod(__x + dx, {m})"
     yn = "(__y + dy)"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def group_quantiles(
     df: DataFrame,
@@ -163,7 +165,8 @@ def _gq_hist(df, group, value, limit, B, max_rounds):
             StructField("__rhi", LongType()),
             StructField("__rw", LongType()),
         ])
-        rng = spark.createDataFrame(
+        rng = local_frame(
+            spark,
             [(p["g"], p["nid"], p["lo"], p["hi"], p["w"]) for p in pending],
             rng_schema,
         )
@@ -218,7 +221,8 @@ def _gq_hist(df, group, value, limit, B, max_rounds):
             StructField("__rlo", LongType()),
             StructField("__rhi", LongType()),
         ])
-        fdf = spark.createDataFrame(
+        fdf = local_frame(
+            spark,
             [(p["g"], p["nid"], p["lo"], p["hi"]) for p in fetch.values()],
             f_schema,
         )
@@ -268,7 +272,7 @@ def _gq_hist(df, group, value, limit, B, max_rounds):
         StructField("median_x2", LongType()),
         StructField("p90", LongType()),
     ])
-    return spark.createDataFrame(out_rows, schema)
+    return local_frame(spark, out_rows, schema)
 
 
 def _gq_route(node, resolved, fetch, pending, limit):

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import text_sql as TS
+from ..session import local_frame
 from ..stages import pin
 
 
@@ -449,7 +450,8 @@ def _top_frac_hist(
             StructField("__rhi", LongType()),
             StructField("__rw", LongType()),
         ])
-        rng = spark.createDataFrame(
+        rng = local_frame(
+            spark,
             [(p["g"], p["nid"], p["lo"], p["hi"], p["w"]) for p in pending],
             rng_schema,
         )
@@ -505,7 +507,8 @@ def _top_frac_hist(
             StructField("__tv", LongType()),
             StructField("__tnull", LongType()),
         ])
-        tdf = spark.createDataFrame(
+        tdf = local_frame(
+            spark,
             [
                 (
                     t["g"], t["nid"],
@@ -581,7 +584,7 @@ def _top_frac_assign(
         StructField("__gkg", LongType()),
         StructField("__groot", LongType()),
     ])
-    gdf = spark.createDataFrame(g_rows, g_schema)
+    gdf = local_frame(spark, g_rows, g_schema)
     d = (
         df.join(F.broadcast(gdf), F.col(group).eqNullSafe(F.col("__g")), "inner")
         .drop("__g")
@@ -617,7 +620,7 @@ def _top_frac_assign(
     )
     state = ["__kg", "__fin", "__nid", "__knd", "__lo", "__w", "__off", "__drop"]
     for i, rows in enumerate(t for t in trans_rounds if t):
-        t = F.broadcast(spark.createDataFrame(rows, t_schema)).alias(f"__t{i}")
+        t = F.broadcast(local_frame(spark, rows, t_schema)).alias(f"__t{i}")
         d = d.withColumn("__b", F.expr(b_expr)).alias(f"__d{i}")
         d = d.join(
             t, (d["__nid"] == t["nid"]) & (d["__b"] == t["b"]), "left"
@@ -1459,7 +1462,7 @@ def sample_to_token_budget(
     ).add(StructField("__off", LongType(), False)).add(
         StructField("__bud", LongType(), False)
     )
-    odf = df.sparkSession.createDataFrame(offs, sch)
+    odf = local_frame(df.sparkSession, offs, sch)
     odf = odf.withColumnRenamed(source, "__osrc").withColumnRenamed(
         "__bkt", "__obkt"
     )

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
+from ..session import local_frame
+
 
 def _batch_dir(base: str, snapshot: str, b: int) -> str:
     return f"{base}/snapshot={snapshot}/batch={b}"
@@ -74,9 +76,12 @@ def write_tiles_checkpointed(
         staged = df.withColumn(
             "__batch", F.pmod(F.col(tile_col), F.lit(n_batches))
         ).filter(F.col("__batch").isin(todo))
+        # the write needs its rows ordered by its partition columns; sort
+        # by them first so the planned write adds no Sort of its own that
+        # would discard the `sort_cols` order inside each file
         (
             staged.repartition(F.col(tile_col))
-            .sortWithinPartitions(*sort_cols)
+            .sortWithinPartitions("__batch", tile_col, *sort_cols)
             .write.mode("overwrite")
             .partitionBy("__batch", tile_col)
             .parquet(staging)
@@ -127,17 +132,18 @@ def write_tiles_checkpointed(
             StructField("batch", IntegerType()),
             df.schema[tile_col],
         ]
-        committed = spark.createDataFrame(
-            [], StructType([StructField(f.name, f.dataType, True) for f in fields])
-        )
+        nullable = [StructField(f.name, f.dataType, True) for f in fields]
+        committed = local_frame(spark, [], StructType(nullable))
     _write_json_atomic(f"{snap_dir}/_schema.json", committed.schema.jsonValue())
     rows = committed.groupBy(tile_col).agg(F.count("*").alias("rows"))
     sizes = {}
     for f in files:
         t = int(f.split(f"{tile_col}=")[1].split("/")[0])
         sizes[t] = sizes.get(t, 0) + os.path.getsize(f)
-    size_df = spark.createDataFrame(
-        [(int(t), int(sz)) for t, sz in sizes.items()], f"{tile_col} long, bytes long"
+    size_df = local_frame(
+        spark,
+        [(int(t), int(sz)) for t, sz in sizes.items()],
+        f"{tile_col} long, bytes long",
     )
     metrics = rows.join(size_df, tile_col, "left")
     metrics.write.mode("overwrite").parquet(f"{base}/_metrics/snapshot={snapshot}")

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.parse import bbox_from_str
 from ..operators import filter as FL
 from ..operators import merge as M
+from ..session import local_frame
 
 EXTRACT_BLOCK_SIZE = 8000  # reference mergechanges/inmem.rs:271
 
@@ -96,7 +97,7 @@ def regroup_blocks(
         acc += n
     if not offsets:
         return df.withColumn("block", F.lit(0).cast("long"))
-    off_df = spark.createDataFrame(offsets, "__bkt long, __off long")
+    off_df = local_frame(spark, offsets, "__bkt long, __off long")
     w = Window.partitionBy("__bkt").orderBy("id")
     return (
         df.withColumn("__bkt", bkt)

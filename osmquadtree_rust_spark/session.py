@@ -4,7 +4,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 
 def get_spark(
@@ -57,3 +60,33 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A driver-built frame as a JVM local relation.
+
+    `rows` is a sequence of tuples (struct values as tuples or dicts, one
+    form per column); `schema` is a DDL string or a StructType.  The rows
+    are handed to the JVM as one column-wise `pyarrow.Table`, so the frame
+    plans as a `LocalRelation` / `LocalTableScan`: no Python-RDD stage, and
+    no Python worker deserializes it each time the frame is evaluated.
+
+    The table is built from the Python values directly, not through
+    pandas: pandas turns a NaN double into NULL and promotes an int64
+    column holding a NULL to float64 (exact only up to 2**53).  Top-level
+    timestamps go through `TimestampType.toInternal`, as the row path's do,
+    so naive values keep meaning Python local time.  Every driver-built
+    frame in the package goes through here.
+    """
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = [
+        pa.array([f.dataType.toInternal(v) for v in col], pa.int64()).cast(a.type)
+        if isinstance(f.dataType, TimestampType)
+        else pa.array(col, a.type)
+        for col, f, a in zip(columns, schema.fields, arrow)
+    ]
+    table = pa.Table.from_arrays(arrays, schema=arrow)
+    return spark.createDataFrame(table, schema)

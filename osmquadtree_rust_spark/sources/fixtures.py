@@ -15,6 +15,7 @@ import zlib
 import numpy as np
 
 from ..functions import qt_numpy as qtn
+from ..session import local_frame
 
 SEED = 42
 NOUNS = ["river", "harbor", "forest", "plaza", "bridge", "meadow", "canyon", "island"]
@@ -279,7 +280,7 @@ def images_spark_df(spark, n: int, with_bytes: bool = True):
          r["w"], r["h"], r["fmt"], r["caption"], r["phash"])
         for r in images_rows(n, with_bytes)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def phash_footprint(phash: np.ndarray, w: np.ndarray, h: np.ndarray):
@@ -380,15 +381,18 @@ def elements_fixture(n_nodes: int = 2000, n_ways: int = 400, n_rels: int = 60):
 
 
 def elements_spark_dfs(spark, nodes, ways, relations):
-    nodes_df = spark.createDataFrame(
+    nodes_df = local_frame(
+        spark,
         [(i, ln, lt) for i, (ln, lt) in sorted(nodes.items())],
         "id long, lon long, lat long",
     )
-    ways_df = spark.createDataFrame(
+    ways_df = local_frame(
+        spark,
         [(i, refs) for i, refs in sorted(ways.items())],
         "id long, refs array<long>",
     )
-    rels_df = spark.createDataFrame(
+    rels_df = local_frame(
+        spark,
         [
             (i, [{"mem_type": t, "mem_ref": r} for t, r in mems])
             for i, mems in sorted(relations.items())

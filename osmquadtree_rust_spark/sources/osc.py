@@ -12,6 +12,7 @@ from __future__ import annotations
 import xml.etree.ElementTree as ET
 
 from ..operators.merge import CREATE, DELETE, MODIFY
+from ..session import local_frame
 
 _SECTION_CT = {"create": CREATE, "modify": MODIFY, "delete": DELETE}
 
@@ -76,21 +77,24 @@ def _as_fixed(v: str) -> int:
 def osc_to_dfs(spark, text: str):
     """Parse and lift to DataFrames matching the change-table schema."""
     parsed = parse_osc(text)
-    nodes = spark.createDataFrame(
+    nodes = local_frame(
+        spark,
         [
             (r["id"], r["version"], r["changetype"], r.get("lon"), r.get("lat"))
             for r in parsed["nodes"]
         ],
         "id long, version long, changetype int, lon long, lat long",
     )
-    ways = spark.createDataFrame(
+    ways = local_frame(
+        spark,
         [
             (r["id"], r["version"], r["changetype"], r.get("refs", []))
             for r in parsed["ways"]
         ],
         "id long, version long, changetype int, refs array<long>",
     )
-    rels = spark.createDataFrame(
+    rels = local_frame(
+        spark,
         [
             (r["id"], r["version"], r["changetype"], r.get("members", []))
             for r in parsed["relations"]

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import fsio
+from ..session import local_frame
 
 
 def _index_epochs_exist(index_dir: str, spark) -> bool:
@@ -68,9 +69,7 @@ def apply_neardup_batch(
                 .select(F.col("doc_id").alias(id_col), "fp", "sz")
             )
         else:
-            idx = spark.createDataFrame(
-                [], f"{id_col} long, fp long, sz long"
-            )
+            idx = local_frame(spark, [], f"{id_col} long, fp long, sz long")
         surv, sfps = INC.incremental_neardup(
             batch, idx, text, id_col, n, window, threshold_ppm, fp_df_cap
         )

@@ -1,7 +1,9 @@
 """Resume test: kill after batch N, resume, identical data + lineage."""
 
+import glob
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +63,56 @@ def test_metrics_table(spark, tmp_path):
     exp = {r.tile: r["count"] for r in df.groupBy("tile").count().collect()}
     assert {t: v[0] for t, v in rows.items()} == exp
     assert all(v[1] and v[1] > 0 for v in rows.values())
+
+
+def _sql_executions(spark) -> dict:
+    """{execution id: [(name, desc) of each executed-plan node]} of the
+    SQL executions the session's status store still holds."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = {}
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        nodes = store.planGraph(eid).allNodes()
+        nodes = [nodes.apply(j) for j in range(nodes.size())]
+        out[eid] = [(n.name(), n.desc()) for n in nodes]
+    return out
+
+
+def test_committed_files_keep_sort_order(spark, tmp_path):
+    """Every committed tile file holds its rows in `sort_cols` order: the
+    one Sort of the staging write orders by the partition columns and then
+    the id, so the planned write adds no Sort that drops the id order."""
+    import pyarrow.parquet as pq
+
+    df = spark.range(20000).select(
+        ((F.col("id") * 7919) % 20000).alias("id")  # shuffled ids
+    ).withColumn("tile", F.col("id") % 12)
+    base = str(tmp_path / "sorted")
+    CK.write_tiles_checkpointed(df, base, "s", n_batches=4)
+
+    files = glob.glob(f"{base}/snapshot=s/batch=*/tile=*/*.parquet")
+    assert len(files) >= 12
+    for f in files:
+        ids = pq.read_table(f, columns=["id"]).column("id").to_pylist()
+        assert ids == sorted(ids), f
+
+    writes = [
+        plan
+        for plan in _sql_executions(spark).values()
+        if any(
+            n == "Execute InsertIntoHadoopFsRelationCommand"
+            and f"{base}/snapshot=s/_staging" in d
+            for n, d in plan
+        )
+    ]
+    assert len(writes) == 1, writes
+    sorts = [d for n, d in writes[0] if n == "Sort"]
+    assert len(sorts) == 1, writes[0]
+    assert re.sub(r"#\d+L?", "", sorts[0]).startswith(
+        "Sort [__batch ASC NULLS FIRST, tile ASC NULLS FIRST, id ASC NULLS FIRST]"
+    ), sorts
 
 
 def test_snapshot_as_of(spark, tmp_path):

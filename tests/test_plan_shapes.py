@@ -9,6 +9,7 @@ reaching the scan) fails here long before it would show up as a
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -330,3 +331,120 @@ def test_stage_spread_only_widens_narrow_scans(spark, tmp_path):
     wide = spark.read.parquet(many)
     assert wide.rdd.getNumPartitions() >= par
     assert _exchanges(spread(wide)) == []
+
+
+def _local_frame_cases():
+    import datetime
+
+    from pyspark.sql.types import (
+        DateType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    def keyed(gtype, keys):
+        # the histogram-round frames: group key typed from user data
+        schema = StructType([StructField("__rg", gtype), StructField("__rnid", LongType())])
+        return [(k, i) for i, k in enumerate(keys)], schema
+
+    return {
+        "long": ([(1, 2**62 + 1), (2, None), (None, -(2**63))], "rel_id long, qt long"),
+        "int": ([(0, -1, 1), (1, None, 0)], "k int, dx int, dy int"),
+        "double": (
+            [(1, float("nan")), (2, None), (3, 0.5), (4, float("inf")), (5, -0.0)],
+            "id long, dist_sq double",
+        ),
+        "string_binary": (
+            [("v0", b"\x00\xff"), (None, b""), ("", None), ("v3", bytearray(b"ab"))],
+            "video_id string, bytes binary",
+        ),
+        "array_long": (
+            [(1, [1, 2**62 + 1]), (2, []), (3, None), (4, [None, -1])],
+            "id long, refs array<long>",
+        ),
+        "array_struct_dicts": (
+            [
+                (1, [{"role": "outer", "mem_type": 1, "mem_ref": 2**62 + 1}]),
+                (2, [{"role": "", "mem_type": 2, "mem_ref": None}]),
+                (3, []),
+                (4, None),
+            ],
+            "id long, members array<struct<role:string, mem_type:int, mem_ref:long>>",
+        ),
+        "array_struct_tuples": (
+            [(1, [("", 2, 7), ("inner", 0, None)]), (2, []), (3, None)],
+            "id long, members array<struct<role:string, mem_type:int, mem_ref:long>>",
+        ),
+        "empty": ([], "id long, fp long, sz long"),
+        "not_null": (
+            [("a", 1, 0), (None, 2, 5)],
+            StructType([
+                StructField("__g", StringType()),
+                StructField("__bkt", LongType(), False),
+                StructField("__off", LongType(), False),
+            ]),
+        ),
+        "date_key": keyed(DateType(), [datetime.date(2024, 2, 29), None]),
+        "timestamp_key": keyed(
+            TimestampType(), [datetime.datetime(2024, 2, 29, 23, 59, 59, 999999), None]
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_local_frame_cases()))
+def test_local_frame_matches_row_path(spark, case):
+    """local_frame gives the rows and schema the row-list path gives —
+    NaN stays NaN, NULL stays NULL, int64 stays exact above 2**53 — and
+    plans as a local relation with no Python-RDD scan."""
+    from osmquadtree_rust_spark.session import local_frame
+
+    rows, schema = _local_frame_cases()[case]
+    got = local_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert repr(got.collect()) == repr(want.collect())
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_rel_qt_fixpoint_has_no_python_rdd(spark, tmp_path):
+    """The rel->rel fixed point ships its driver-side state back as local
+    relations: the executed plan holds no Python-RDD scan, and its one
+    Python boundary is the node point encode."""
+    from osmquadtree_rust_spark.gate import GATE
+
+    spark.range(1, 3000).select(F.col("id").alias("o_orderkey")).write.parquet(
+        str(tmp_path / "orders.parquet")
+    )
+    df = GATE["rel_qt_fixpoint"]["spark"](spark, str(tmp_path))
+    df.write.format("noop").mode("overwrite").save()
+    p = _plan(df)
+    assert "ExistingRDD" not in p and "LogicalRDD" not in p, p
+    assert p.split("== Initial Plan ==")[0].count("ArrowEvalPython") == 1, p
+
+
+def test_driver_frames_only_through_local_frame():
+    """Driver-built frames have one way in: `createDataFrame(` and
+    `parallelize(` appear in the package only inside session.local_frame."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "osmquadtree_rust_spark"
+    session = pkg / "session.py"
+    (fn,) = [
+        n
+        for n in ast.walk(ast.parse(session.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "local_frame"
+    ]
+    found = [
+        (str(path.relative_to(pkg)), i)
+        for path in sorted(pkg.rglob("*.py"))
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\b(createDataFrame|parallelize)\(", line)
+        and not (path == session and fn.lineno <= i <= fn.end_lineno)
+    ]
+    assert found == [], found
