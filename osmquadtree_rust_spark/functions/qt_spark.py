@@ -41,18 +41,6 @@ def qt_common(a: str, b: str) -> Column:
     return F.expr(qsql.qt_common_sql(a, b, qsql.SPARK))
 
 
-def qt_common_agg(c: str) -> Column:
-    """LCA aggregate: use in ``groupBy(...).agg(qt_common_agg("qt"))``.
-    Compiles to min/max partial aggregates + a final bit-math projection —
-    fully JVM-side, shuffle carries 16 bytes per group.
-
-    NOTE: this single-expression form textually inlines the min/max
-    aggregates ~50x, which whole-stage codegen turns into megabytes of
-    Java (30s+ janino compile).  Prefer ``agg_lca`` which splits the
-    aggregate from the projection."""
-    return F.expr(qsql.qt_common_agg_sql(c, qsql.SPARK))
-
-
 def agg_lca(
     df: DataFrame,
     group_cols: list[str],

@@ -620,9 +620,10 @@ def _ur(spark, sf_dir):
             wq.withColumn("etype", F.lit(1))
         )
         # fixed tiling from the synthetic world (tile_assignment's groups):
-        # updates route into the EXISTING partitioning, they never re-tile
+        # updates route into the EXISTING partitioning, they never re-tile.
+        # Only the group cells are read, so nothing is persisted
         _, group_cells = P.tile_synthetic_images(
-            spark, _TILE_N, target=_TILE_TARGET
+            spark, _TILE_N, target=_TILE_TARGET, persist=False
         )
         route = P.make_route_udf(spark, group_cells)
         assigned = allq.withColumn("tile", route(F.col("qt"))).persist()

@@ -2600,8 +2600,9 @@ GROUP BY r.source
 # ===========================================================================
 # end-to-end NEAR-dup dedup: simhash pairs -> connected components ->
 # keep the component minimum -> per-source corpus stats.  The transitive
-# cut (dedup_keep_first alone misses chains) composed with real corpus
-# accounting — the full near-dedup story in one gate.
+# cut (dropping each pair's higher id in one sweep misses chains)
+# composed with real corpus accounting — the full near-dedup story in
+# one gate.
 # ===========================================================================
 
 @_register("neardup_dedup_corpus")
@@ -3014,17 +3015,9 @@ def _ssp(spark, sf_dir):
             ).alias("text"),
         )
     )
-    fps = D.winnow_fingerprints(doubled, n=_WIN_N, window=_WIN_W).persist()
-    cand = (
-        fps.select(F.col("doc_id").alias("a"), "fp")
-        .join(fps.select(F.col("doc_id").alias("b"), "fp"), "fp")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .persist()
+    cand = D.winnow_candidates(
+        D.winnow_fingerprints(doubled, n=_WIN_N, window=_WIN_W)
     )
-    cand.count()
-    fps.unpersist()
     out = D.shared_span_pairs(
         cand, doubled, n=_WIN_N, min_run=_SSP_MIN_RUN
     ).localCheckpoint(eager=True)

@@ -150,7 +150,7 @@ def apply_bpe_merges(
     string work, not corpus*K.  The chain itself is staged every
     `merges_per_stage` merges with an eager localCheckpoint (vocab-sized)
     so whole-stage codegen never sees an unboundedly deep expression at
-    real merge counts (the janino-blow-up discipline of qt_common_agg).
+    real merge counts (the janino-blow-up discipline of agg_lca).
 
     `merges` is [(left, right), ...] in merge order (pass
     [(r.left, r.right) for r in learn_bpe_merges(...).collect()]).

@@ -13,7 +13,7 @@ out-of-core writer (calculate.rs:774-855: negative rel qts -> 0):
 
 Spark mapping (SURVEY.md §2.4/2.5): explode(refs) is the way->node edge
 list; bbox aggregation and the LCA reduce ride native partial+final hash
-aggregation (qt_common_agg compiles to min/max + bit math); only the
+aggregation (agg_lca compiles to min/max + bit math); only the
 bbox->cell encode crosses into an Arrow-batched pandas UDF.  The rel->rel
 fixed point runs on the driver: rel->rel edges are metadata-scale (a few
 thousand at planet scale) and the reference's in-pass update order cannot

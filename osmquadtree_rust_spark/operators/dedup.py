@@ -333,6 +333,29 @@ def _cap_fp_df(fps: DataFrame, fp_df_cap: int | None) -> DataFrame:
     return fps.join(hot, "fp", "left_anti")
 
 
+def winnow_candidates(fps: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Candidate pairs (a, b), a < b, of documents sharing a winnowing
+    fingerprint: the self-join on `fp` of (id_col, fp) rows, distinct.
+
+    `fps` is persisted across the self-join and released before return;
+    the candidates come back persisted and already computed (one eager
+    count), because every caller consumes them twice.  The caller
+    unpersists them when done."""
+    fps = fps.persist()
+    la = fps.select(F.col(id_col).alias("a"), "fp")
+    lb = fps.select(F.col(id_col).alias("b"), "fp")
+    cand = (
+        la.join(lb, "fp")
+        .filter(F.col("a") < F.col("b"))
+        .select("a", "b")
+        .distinct()
+        .persist()
+    )
+    cand.count()
+    fps.unpersist()
+    return cand
+
+
 def winnow_neardup_pairs(
     df: DataFrame,
     text: str = "text",
@@ -367,20 +390,10 @@ def winnow_neardup_pairs(
     before return.  The returned DataFrame is backed by its own
     checkpoint blocks; long-lived callers may `.unpersist()` it when
     done."""
-    fps = _cap_fp_df(
-        winnow_fingerprints(df, text, id_col, n, window), fp_df_cap
-    ).persist()
-    la = fps.select(F.col(id_col).alias("a"), "fp")
-    lb = fps.select(F.col(id_col).alias("b"), "fp")
-    cand = (
-        la.join(lb, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .persist()
+    cand = winnow_candidates(
+        _cap_fp_df(winnow_fingerprints(df, text, id_col, n, window), fp_df_cap),
+        id_col,
     )
-    cand.count()  # eager: one evaluation of the fingerprint self-join
-    fps.unpersist()
     res = ngram_jaccard_on_pairs(
         cand, df, text, id_col, n=n, threshold_ppm=threshold_ppm
     ).localCheckpoint(eager=True)
@@ -560,8 +573,8 @@ def connected_components(
 ) -> DataFrame:
     """Connected components over an undirected pair graph: returns
     (id, component) with component = the minimum id in the component —
-    the exact duplicate-cluster step after candidate verification (a
-    one-sweep `dedup_keep_first` misses transitive clusters).
+    the exact duplicate-cluster step after candidate verification (one
+    sweep dropping each pair's higher id misses transitive clusters).
 
     Min-label propagation with a fused pointer jump per round (labels
     compose: labels[labels[id]] is always valid and never larger), so
@@ -680,16 +693,6 @@ def connected_components(
             f"needed grow with log2 of the graph diameter)"
         )
     return labels.select(F.col("id").alias(id_col), "comp")
-
-
-def dedup_keep_first(
-    df: DataFrame, dup_pairs: DataFrame, id_col: str = "doc_id"
-) -> DataFrame:
-    """Drop the higher id of each duplicate pair (transitive closure
-    approximated by one sweep — exact for pairwise-confirmed clusters
-    whose members all pair with the cluster minimum)."""
-    losers = dup_pairs.select(F.col("b").alias(id_col)).distinct()
-    return df.join(losers, id_col, "left_anti")
 
 
 def _block_layout(m: int) -> list[tuple[int, int]]:
@@ -1001,20 +1004,10 @@ def dedup_shared_spans(
             f"n + window - 1 = {n + window - 1}; shorter shared runs "
             f"can miss the candidate join — lower n/window instead"
         )
-    fps = _cap_fp_df(
-        winnow_fingerprints(df, text, id_col, n, window), fp_df_cap
-    ).persist()
-    la = fps.select(F.col(id_col).alias("a"), "fp")
-    lb = fps.select(F.col(id_col).alias("b"), "fp")
-    cand = (
-        la.join(lb, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .persist()
+    cand = winnow_candidates(
+        _cap_fp_df(winnow_fingerprints(df, text, id_col, n, window), fp_df_cap),
+        id_col,
     )
-    cand.count()  # eager: one evaluation of the fingerprint self-join
-    fps.unpersist()
     spans = shared_span_pairs(cand, df, text, id_col, n, min_run)
     losers = (
         spans.select(F.col("b").alias(id_col))
@@ -1036,7 +1029,7 @@ def dedup_keep_best(
     """Keep ONE representative per duplicate cluster, chosen by QUALITY
     (order desc — or asc — with id asc tie-break) instead of minimum id:
     real curation pipelines keep the best-scoring duplicate, not the
-    oldest (dedup_keep_first/connected-components' min-id convention).
+    oldest (connected_components' min-id convention).
 
     `components` is connected_components' (id, comp) output; rows of
     `df` absent from it (or with NULL comp) are their own singleton
@@ -1120,20 +1113,10 @@ def trim_shared_spans(
         raise ValueError(
             "column n_trimmed_tokens/__ivs already exists; rename it first"
         )
-    fps = _cap_fp_df(
-        winnow_fingerprints(df, text, id_col, n, window), fp_df_cap
-    ).persist()
-    la = fps.select(F.col(id_col).alias("a"), "fp")
-    lb = fps.select(F.col(id_col).alias("b"), "fp")
-    cand = (
-        la.join(lb, "fp")
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-        .persist()
+    cand = winnow_candidates(
+        _cap_fp_df(winnow_fingerprints(df, text, id_col, n, window), fp_df_cap),
+        id_col,
     )
-    cand.count()
-    fps.unpersist()
     spans = shared_span_pairs(cand, df, text, id_col, n, min_run)
     ivs = spans.select(
         F.col("b").alias(id_col),

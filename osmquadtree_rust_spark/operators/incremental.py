@@ -243,8 +243,8 @@ def incremental_neardup(
         the streaming wrapper filters epochs, but ad-hoc callers may
         not) never self-matches (a != b guard).
       * INTRA delta: fingerprint-Jaccard pairs within the delta; the
-        higher id of each pair drops (dedup_keep_first semantics —
-        one sweep, exact for clusters pairing with their minimum).
+        higher id of each pair drops (one sweep — exact for clusters
+        pairing with their minimum).
 
     `index_fps` should come from read_fp_index (or any frame carrying
     the stored `sz` fingerprint counts): the index side then needs NO

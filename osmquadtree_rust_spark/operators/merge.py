@@ -53,10 +53,7 @@ def apply_changes(
     """MERGE-INTO semantics: newer row wins per key, Delete/Remove rows
     tombstone the key, survivors reset to Normal
     (combine_block.rs apply_change + check_changetype)."""
-    merged = combine_snapshots([base, changes], keys)
-    return merged.filter(
-        ~F.col(changetype_col).isin(DELETE, REMOVE)
-    ).withColumn(changetype_col, F.lit(NORMAL))
+    return merge_changes(base, [changes], keys, changetype_col)
 
 
 def merge_changes(

@@ -352,14 +352,14 @@ def find_tree_groups(
 # Spark-facing helpers
 # ---------------------------------------------------------------------------
 
-def build_tree_from_histogram(cells, weights, graph_level: int = qtn.QT_GRAPH_LEVEL) -> QuadtreeTree:
+def build_tree_from_histogram(cells, weights) -> QuadtreeTree:
     """Build the QuadtreeTree from a collected (cell, weight) histogram,
     fully vectorized (a planet histogram is ~1M cells -> ~5M tree items;
     item-at-a-time insertion is minutes in Python, this is <1s).
 
-    The reference rounds each element cell to `graph_level` before counting
-    (src/sortblocks/prepgraph.rs:53-101); callers should already have done
-    `groupBy(qt_round(qt, graph_level)).sum(weight)` in Spark and collected
+    The reference rounds each element cell to the graph level (17) before
+    counting (src/sortblocks/prepgraph.rs:53-101); callers should already
+    have done that in Spark (plans/pipeline.cell_histogram) and collected
     the (small) result.  The produced structure is identical to sequential
     `add` in ascending cell order (the BTreeMap walk of the reference):
     grouping results depend only on structure, and traversal always visits

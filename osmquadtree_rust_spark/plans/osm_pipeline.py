@@ -13,8 +13,6 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import qt_numpy as qtn
-from ..functions import qt_spark as qs
 from ..operators import calcqts as C
 from . import pipeline as P
 
@@ -38,14 +36,12 @@ def tile_elements(
     ways: DataFrame,
     relations: DataFrame,
     target: int = P.DEFAULT_TARGET,
-    graph_level: int = qtn.QT_GRAPH_LEVEL,
 ) -> tuple[DataFrame, np.ndarray]:
     """Full chain; returns ((etype,id,qt,tile), group cells).  The final
     store is written sorted by (etype, id) within tile partitions —
     the reference's global element order (traits.rs:52-59)."""
     eq = element_qts(nodes, ways, relations)
-    weight = F.when(F.col("etype") == 0, 1).when(F.col("etype") == 1, 8).otherwise(20)
-    assigned, groups = P.assign_tiles(
-        eq.withColumn("w", weight), "qt", "w", target, graph_level
-    )
+    et = F.col("etype")
+    weight = F.when(et == 0, WEIGHTS[0]).when(et == 1, WEIGHTS[1]).otherwise(WEIGHTS[2])
+    assigned, groups = P.assign_tiles(eq.withColumn("w", weight), "qt", "w", target)
     return assigned.select("etype", "id", "qt", "tile"), groups

@@ -9,10 +9,14 @@ Stages, and where each runs:
    exact find_tree_groups port on the driver (quadtreetree.rs:357-397)
 4. routing (data-scale): broadcast the sorted group-cell array, route each
    element cell to its deepest group ancestor in a vectorized pandas UDF
-   (QuadtreeTree::find, quadtreetree.rs:128-142)
-5. materialize (data-scale): repartition by tile — with explicit salting
-   for tiles whose weight exceeds `salt_threshold` (dense-tile skew) —
-   sortWithinPartitions, write partitioned parquet
+   (make_route_udf, QuadtreeTree::find, quadtreetree.rs:128-142).  Steps
+   2-4 are assign_tiles, the only tile-assignment path; the encode of
+   step 1 and the route are two separate Arrow UDFs.
+5. materialize (data-scale): write_tiles repartitions by tile — salting
+   tiles whose weight exceeds `salt_threshold` (dense-tile skew) — then
+   sortWithinPartitions and writes partitioned parquet.  The snapshot
+   store's writer (plans/checkpoint.write_tiles_checkpointed) does not
+   salt.
 
 At 100 TB the only driver-side piece is step 3, whose input is one row per
 occupied level-17 cell (bounded by 4^17 but ~1M in practice for a planet).
@@ -72,30 +76,22 @@ def with_phash_footprint(images: DataFrame) -> DataFrame:
 
 
 def cell_histogram(
-    df: DataFrame,
-    qt_col: str = "qt",
-    weight_col: str | None = None,
-    graph_level: int = qtn.QT_GRAPH_LEVEL,
+    df: DataFrame, qt_col: str = "qt", weight_col: str | None = None
 ) -> DataFrame:
     """(cell, weight) at the grouping level — one row per occupied cell."""
     w = F.col(weight_col) if weight_col else F.lit(1)
     return (
-        df.withColumn("__cell", qs.qt_round(qt_col, graph_level))
+        df.withColumn("__cell", qs.qt_round(qt_col, qtn.QT_GRAPH_LEVEL))
         .groupBy("__cell")
         .agg(F.sum(w).alias("weight"))
         .withColumnRenamed("__cell", "cell")
     )
 
 
-def compute_groups(
-    cells,
-    weights,
-    target: int = DEFAULT_TARGET,
-    absmin: int | None = None,
-) -> np.ndarray:
+def compute_groups(cells, weights, target: int = DEFAULT_TARGET) -> np.ndarray:
     """Driver-side: histogram arrays -> sorted group-cell array."""
     tree = T.build_tree_from_histogram(cells, weights)
-    groups = T.find_tree_groups(tree, target, absmin if absmin is not None else target // 2)
+    groups = T.find_tree_groups(tree, target, target // 2)
     return T.group_lookup_arrays(groups)
 
 
@@ -109,74 +105,31 @@ def make_route_udf(spark, group_cells: np.ndarray):
     return route
 
 
-def make_calculate_route_udf(
-    spark,
-    group_cells: np.ndarray,
-    maxlevel: int = qtn.QT_MAX_LEVEL,
-    buffer: float = qtn.QT_BUFFER,
-):
-    """Fused bbox -> struct(qt, tile) for the UNPERSISTED routing pass.
-
-    When the encode is recomputed for routing (persist=False), chaining
-    with_bbox_qt -> route costs two ArrowEvalPython stages with the qt
-    column crossing the JVM<->Python boundary twice (out of the encode,
-    back into the route).  Composing qtn.calculate + T.route_cells in ONE
-    pandas UDF ships the bbox in and (qt, tile) out in a single crossing —
-    numerically identical (same numpy core, same batch shapes), ~1/3 less
-    Arrow traffic on a memory-bandwidth-bound host."""
-    from pyspark.sql.types import StructField, StructType
-
-    bc = spark.sparkContext.broadcast(np.asarray(group_cells, dtype=np.int64))
-    schema = StructType(
-        [StructField("qt", LongType()), StructField("tile", LongType())]
-    )
-
-    @F.pandas_udf(schema)
-    def calc_route(
-        minlon: pd.Series, minlat: pd.Series, maxlon: pd.Series, maxlat: pd.Series
-    ) -> pd.DataFrame:
-        qt = qtn.calculate(
-            minlon.to_numpy(np.int64),
-            minlat.to_numpy(np.int64),
-            maxlon.to_numpy(np.int64),
-            maxlat.to_numpy(np.int64),
-            maxlevel,
-            buffer,
-        )
-        # raw qt, exactly as assign_tiles routes it (routing is invariant
-        # to graph-level rounding — groups sit at depth <= graph level —
-        # but the fused and two-step paths must share one code path)
-        return pd.DataFrame({"qt": qt, "tile": T.route_cells(qt, bc.value)})
-
-    return calc_route
-
-
 def assign_tiles(
     df: DataFrame,
     qt_col: str = "qt",
     weight_col: str | None = None,
     target: int = DEFAULT_TARGET,
-    graph_level: int = qtn.QT_GRAPH_LEVEL,
-    tile_col: str = "tile",
     persist: bool = True,
 ) -> tuple[DataFrame, np.ndarray]:
-    """Histogram -> groups -> routed tile column.  Returns (df+tile, group
-    cells).
+    """Histogram -> groups -> routed `tile` column: the one tile-assignment
+    path.  Returns (df+tile, group cells).
 
     The input is persisted by default: the histogram pass and the final
     routed output both consume the (UDF-encoded) cells, and at cluster
     scale this materialization is the natural per-snapshot checkpoint.
-    The histogram comes back via Arrow (toPandas), not Row collect —
-    metadata-scale but still ~1M rows for a planet.
+    persist=False recomputes the encode for the routing pass instead and
+    caches nothing.  The histogram comes back via Arrow (toPandas), not
+    Row collect — metadata-scale but still ~1M rows for a planet.
     """
     if persist:
         df = df.persist()
-    pdf = cell_histogram(df, qt_col, weight_col, graph_level).toPandas()
+    pdf = cell_histogram(df, qt_col, weight_col).toPandas()
     group_cells = compute_groups(
         pdf["cell"].to_numpy(np.int64), pdf["weight"].to_numpy(np.int64), target
     )
     route = make_route_udf(df.sparkSession, group_cells)
-    return df.withColumn(tile_col, route(F.col(qt_col))), group_cells
+    return df.withColumn("tile", route(F.col(qt_col))), group_cells
 
 
 def write_tiles(
@@ -241,33 +194,10 @@ def tile_synthetic_images(
     persist: bool = True,
 ) -> tuple[DataFrame, np.ndarray]:
     """Flagship DAG on the deterministic synthetic image-footprint table:
-    range(n) -> footprint -> cell -> tile.  Returns (assigned df, groups).
-
-    persist=False recomputes the (CPU-cheap, embarrassingly-parallel)
-    encode for the routing pass instead of materializing it — the right
-    trade on memory-bandwidth-starved hosts — and fuses encode+route into
-    one Arrow crossing (make_calculate_route_udf)."""
-    base = spark.range(n).select(F.col("id"))
-    fp = with_synth_footprint(base, "id")
+    range(n) -> footprint -> cell -> assign_tiles.  Returns (assigned df,
+    groups); `persist` is assign_tiles' flag."""
+    fp = with_synth_footprint(spark.range(n).select(F.col("id")), "id")
     with_qt = qs.with_bbox_qt(
         fp, "minlon", "minlat", "maxlon", "maxlat", "qt", maxlevel, buffer
     ).select("id", "qt")
-    if persist:
-        return assign_tiles(with_qt, "qt", None, target, persist=True)
-    pdf = cell_histogram(with_qt, "qt", None, qtn.QT_GRAPH_LEVEL).toPandas()
-    group_cells = compute_groups(
-        pdf["cell"].to_numpy(np.int64), pdf["weight"].to_numpy(np.int64), target
-    )
-    fused = make_calculate_route_udf(spark, group_cells, maxlevel, buffer)
-    out = fp.withColumn(
-        "__qtile",
-        fused(
-            F.col("minlon").cast("int"),
-            F.col("minlat").cast("int"),
-            F.col("maxlon").cast("int"),
-            F.col("maxlat").cast("int"),
-        ),
-    ).select(
-        "id", F.col("__qtile.qt").alias("qt"), F.col("__qtile.tile").alias("tile")
-    )
-    return out, group_cells
+    return assign_tiles(with_qt, "qt", None, target, persist=persist)

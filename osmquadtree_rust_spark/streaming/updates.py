@@ -118,6 +118,32 @@ def update_decision_table(
     )
 
 
+def _etype_delta(
+    changes: DataFrame,
+    harvested: DataFrame,
+    stored: DataFrame,
+    etype: int,
+    new_qts: DataFrame,
+    route_udf,
+) -> DataFrame:
+    """One element type's leg: explicit changes plus the harvested ids they
+    do not name (as Normal), through update_decision_table on that type's
+    slice of `stored`, tagged with `etype`."""
+    all_changes = changes.select("id", "changetype").unionByName(
+        harvested.join(changes.select("id"), "id", "left_anti")
+        .select("id")
+        .withColumn("changetype", F.lit(NORMAL))
+    )
+    return update_decision_table(
+        all_changes,
+        stored.filter(F.col("etype") == etype).select(
+            "id", F.col("qt").alias("qt_old"), "alloc"
+        ),
+        new_qts,
+        route_udf,
+    ).withColumn("etype", F.lit(etype))
+
+
 def run_update(
     nodes: DataFrame,
     ways: DataFrame,
@@ -154,32 +180,8 @@ def run_update(
     nq = C.node_qts(sub_nodes, sub_ways, wq)
 
     route = make_route_udf(spark, group_cells)
-    node_changes = change_nodes.select("id", "changetype").unionByName(
-        ref_nodes.join(change_nodes.select("id"), "id", "left_anti")
-        .select("id")
-        .withColumn("changetype", F.lit(NORMAL))
-    )
-    way_changes = change_ways.select("id", "changetype").unionByName(
-        t_ways.join(change_ways.select("id"), "id", "left_anti")
-        .select("id")
-        .withColumn("changetype", F.lit(NORMAL))
-    )
-    node_delta = update_decision_table(
-        node_changes,
-        stored.filter(F.col("etype") == 0).select(
-            "id", F.col("qt").alias("qt_old"), "alloc"
-        ),
-        nq,
-        route,
-    ).withColumn("etype", F.lit(0))
-    way_delta = update_decision_table(
-        way_changes,
-        stored.filter(F.col("etype") == 1).select(
-            "id", F.col("qt").alias("qt_old"), "alloc"
-        ),
-        wq.withColumnRenamed("id", "id"),
-        route,
-    ).withColumn("etype", F.lit(1))
+    node_delta = _etype_delta(change_nodes, ref_nodes, stored, 0, nq, route)
+    way_delta = _etype_delta(change_ways, t_ways, stored, 1, wq, route)
     return node_delta.unionByName(way_delta), merged_nodes, merged_ways
 
 
@@ -217,16 +219,4 @@ def run_update_relations(
     rq = C.rel_qts(sub, node_qts, way_qts)
 
     route = make_route_udf(relations.sparkSession, group_cells)
-    rel_changes = change_rels.select("id", "changetype").unionByName(
-        touched.join(change_rels.select("id"), "id", "left_anti")
-        .select("id")
-        .withColumn("changetype", F.lit(NORMAL))
-    )
-    return update_decision_table(
-        rel_changes,
-        stored.filter(F.col("etype") == 2).select(
-            "id", F.col("qt").alias("qt_old"), "alloc"
-        ),
-        rq,
-        route,
-    ).withColumn("etype", F.lit(2))
+    return _etype_delta(change_rels, touched, stored, 2, rq, route)

@@ -59,6 +59,24 @@ def test_tile_synthetic_images_end_to_end(spark):
         assert r.tile == 0 or O.is_parent(int(r.tile), int(r.qt))
 
 
+def test_tile_synthetic_images_persist_flag_is_cache_only(spark):
+    """persist=True and persist=False run the same assign_tiles path: the
+    flag only decides whether the encoded cells are cached, so rows and
+    groups are identical."""
+    n = 20000
+    got = {}
+    for persist in (True, False):
+        assigned, groups = P.tile_synthetic_images(
+            spark, n, target=2000, persist=persist
+        )
+        rows = assigned.select("id", "qt", "tile").collect()
+        got[persist] = (sorted(tuple(r) for r in rows), groups.tolist())
+    spark.catalog.clearCache()
+    assert len(got[True][0]) == n
+    assert len(set(t for _, _, t in got[True][0])) > 1
+    assert got[True] == got[False]
+
+
 def test_write_tiles_salted(spark, tmp_path):
     n = 5000
     assigned, groups = P.tile_synthetic_images(spark, n, target=1000)

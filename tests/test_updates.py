@@ -160,3 +160,26 @@ def test_update_relations_leg(spark):
     assert (301, REMOVE) in rows and rows[(301, REMOVE)] == (a, 0)
     assert (302, UNCHANGED) in rows and rows[(302, UNCHANGED)][0] == b
     assert (302, REMOVE) in rows and rows[(302, REMOVE)] == (a, 0)
+
+
+def test_update_store_build_leaves_no_cached_frame(spark, tmp_path):
+    """The update_roundtrip store build reads only the synthetic tiling's
+    group cells: it must leave no persisted frame behind (a persisted
+    input of assign_tiles is unreachable from its result, so no caller
+    could release it)."""
+    import shutil
+
+    from osmquadtree_rust_spark import gate as G
+
+    sf_dir = str(tmp_path)
+    spark.range(6000).select(
+        F.expr("id div 4").alias("l_orderkey"),
+        ((F.col("id") * 7919) % 1500).alias("l_partkey"),
+    ).write.parquet(f"{sf_dir}/lineitem.parquet")
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    G.GATE["update_roundtrip"]["spark"](spark, sf_dir)
+    after = persistent().size()
+    shutil.rmtree(G._UPD_STORES.pop(sf_dir))
+    assert after == before
