@@ -234,7 +234,11 @@ _TILE_TARGET = 4000
 def _ta(spark, sf_dir):
     from .plans import pipeline as P
 
-    assigned, _ = P.tile_synthetic_images(spark, _TILE_N, target=_TILE_TARGET)
+    # persist=False: a cached encode would outlive the query, unreachable
+    # from the returned frame
+    assigned, _ = P.tile_synthetic_images(
+        spark, _TILE_N, target=_TILE_TARGET, persist=False
+    )
     return assigned.select(
         F.col("id").cast("long").alias("img_id"),
         F.col("qt").cast("long").alias("qt"),

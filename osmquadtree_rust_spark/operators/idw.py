@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions import geohash as GH
 from ..functions.text_sql import SPARK, idiv_sql
+from .spatial_join import grid_cover
 
 
 def idw_grid(
@@ -86,34 +87,10 @@ def idw_grid(
 
     # covering of [p - r, p + r] per axis — every cell whose anchor can
     # be within r of the point lies in it (the anchor is in its cell)
-    x0s, y0s = GH.geohash_xy_sql(f"({lon}) - {r}", f"({lat}) - {r}", chars, SPARK)
-    x1s, y1s = GH.geohash_xy_sql(f"({lon}) + {r}", f"({lat}) + {r}", chars, SPARK)
-    mca = int(max_cells_per_axis)
-
-    def guarded(lo: str, hi: str, axis: str) -> str:
-        return (
-            f"CASE WHEN ({hi}) - ({lo}) < {mca} THEN ({hi}) "
-            f"ELSE CAST(raise_error('idw_grid: radius covering exceeds "
-            f"{mca} cells on {axis}; lower radius_fixed or chars') "
-            f"AS BIGINT) END"
-        )
-
-    cover = points.select(
-        F.col(lon).cast("long").alias("__pu"),
-        F.col(lat).cast("long").alias("__pv"),
-        F.expr(vguard).alias("__v"),
-        F.expr(x0s).alias("__x0"),
-        F.expr(y0s).alias("__y0"),
-        F.expr(guarded(x0s, x1s, "lon")).alias("__x1"),
-        F.expr(guarded(y0s, y1s, "lat")).alias("__y1"),
-    )
-    cand = cover.select(
-        "__pu", "__pv", "__v",
-        F.explode(F.expr("sequence(__x0, __x1)")).alias("__cx"),
-        "__y0", "__y1",
-    ).select(
-        "__pu", "__pv", "__v", "__cx",
-        F.explode(F.expr("sequence(__y0, __y1)")).alias("__cy"),
+    cand = grid_cover(
+        pts.select("__pu", "__pv", "__v"),
+        (f"__pu - {r}", f"__pv - {r}", f"__pu + {r}", f"__pv + {r}"),
+        chars, max_cells_per_axis, "idw_grid",
     )
     cand = cand.join(cells, ["__cx", "__cy"])
 

@@ -5,7 +5,7 @@ filters, `filter_elements.rs:82-129`); snapping a GPS point stream onto
 a road network is the natural geospatial-tier generalization every
 trajectory pipeline needs before route-level analytics (road usage,
 speed-per-road, conflation).  Built from the repo's established
-machinery: geohash-grid candidate covering (operators/spatial_join.py),
+machinery: geohash-grid candidate covering (spatial_join.grid_cover),
 pure-integer geometry shared verbatim with the DuckDB oracle, and a
 deterministic struct-min argmin.
 
@@ -134,7 +134,7 @@ def snap_to_roads(
     argmin is a partial-aggregating groupBy on the point key.  No
     all-pairs stage, no Python, no window.
     """
-    from .spatial_join import auto_bbox_chars
+    from .spatial_join import auto_bbox_chars, grid_cover
 
     C = int(max_dist_fixed)
     S = int(max_seg_span_fixed)
@@ -168,6 +168,7 @@ def snap_to_roads(
         F.col(y1).cast("long").alias("__ry1"),
         F.col(x2).cast("long").alias("__rx2"),
         F.col(y2).cast("long").alias("__ry2"),
+        F.expr(span_guard).alias("__ok"),
         F.expr(
             clamp(f"LEAST({x1}, {x2}) - {C}", 1_800_000_000)
         ).alias("__pnx"),
@@ -180,37 +181,10 @@ def snap_to_roads(
         F.expr(
             clamp(f"GREATEST({y1}, {y2}) + {C}", 900_000_000)
         ).alias("__pxy"),
-        F.expr(span_guard).alias("__ok"),
     )
-    x0s, y0s = GH.geohash_xy_sql("__pnx", "__pny", chars, SPARK)
-    x1s, y1s = GH.geohash_xy_sql("__pxx", "__pxy", chars, SPARK)
-    mca = int(max_cells_per_axis)
-
-    def guarded(lo: str, hi: str, axis: str) -> str:
-        return (
-            f"CASE WHEN ({hi}) - ({lo}) < {mca} THEN ({hi}) "
-            f"ELSE CAST(raise_error('snap_to_roads: padded covering "
-            f"exceeds {mca} cells on {axis}; lower chars or spans') "
-            f"AS BIGINT) END"
-        )
-
-    carry = ["__rid", "__rseg", "__rx1", "__ry1", "__rx2", "__ry2", "__ok"]
-    base = rd.select(
-        *carry,
-        F.expr(x0s).alias("__cx0"),
-        F.expr(y0s).alias("__cy0"),
-        F.expr(guarded(x0s, x1s, "lon")).alias("__cx1"),
-        F.expr(guarded(y0s, y1s, "lat")).alias("__cy1"),
-    )
-    cells = base.select(
-        *carry,
-        F.explode(F.expr("sequence(__cx0, __cx1)")).alias("__cx"),
-        "__cy0",
-        "__cy1",
-    ).select(
-        *carry,
-        "__cx",
-        F.explode(F.expr("sequence(__cy0, __cy1)")).alias("__cy"),
+    cells = grid_cover(
+        rd, ("__pnx", "__pny", "__pxx", "__pxy"), chars, max_cells_per_axis,
+        "snap_to_roads",
     )
 
     pxs, pys = GH.geohash_xy_sql(lon, lat, chars, SPARK)

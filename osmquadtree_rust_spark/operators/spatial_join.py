@@ -16,7 +16,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
@@ -171,74 +171,97 @@ def geohash_neighbors(
     center — the candidate generator for radius joins at FINER depths
     (d <= ring * cell_span instead of d <= cell_span), trading
     (2*ring+1)^2 explode rows for much smaller per-cell populations."""
-    from pyspark.sql import functions as F
-
     from ..functions import geohash as GH
 
+    lon_bits, lat_bits = GH._bits_for(chars)
+    xs, ys = GH.geohash_xy_sql(lon, lat, chars, "spark")
+    return _ring_neighbors(
+        points, id_col, carry_cols, {lon, lat}, xs, ys, 1 << lon_bits,
+        1 << lat_bits, ring,
+        lambda x, y: GH.interleave_sql(x, y, chars, "spark"),
+        "geohash_neighbors", f"chars={chars}",
+    )
+
+
+def _ring_neighbors(
+    df: DataFrame,
+    id_col: str,
+    carry_cols: tuple,
+    inputs: set,
+    xs: str,
+    ys: str,
+    nx: int,
+    ny: int,
+    ring: int,
+    encode,
+    what: str,
+    grid: str,
+) -> DataFrame:
+    """The ring expansion shared by geohash_neighbors and qt_neighbors:
+    grid (x, y) from the SQL `xs` / `ys` over the `inputs` columns, one
+    broadcast join against the ring_offsets block, x wrapped mod `nx`,
+    rows with y outside [0, ny) dropped, and each neighbour cell encoded
+    by `encode(x_sql, y_sql)`.  Returns (id, *carry_cols, k, neighbor)."""
     reserved = {"k", "dx", "dy", "neighbor", "__x", "__y"} & (
-        {id_col, lon, lat} | set(carry_cols)
+        {id_col} | set(inputs) | set(carry_cols)
     )
     if reserved:
         raise ValueError(
-            f"column(s) {sorted(reserved)} collide with geohash_neighbors' "
+            f"column(s) {sorted(reserved)} collide with {what}' "
             f"internal names; rename them first"
         )
-    spark = points.sparkSession
-    lon_bits, lat_bits = GH._bits_for(chars)
-    # wrap-collision guard: with 2*ring+1 > 2^lon_bits the modular x
-    # offsets alias (pmod(x-r) == pmod(x+r')), the same cell is emitted
-    # twice, and downstream radius joins double-count pairs — raise
-    # instead of silently breaking the exactly-once-match invariant
-    if 2 * int(ring) + 1 > (1 << lon_bits):
+    # wrap-collision guard: with 2*ring+1 > nx the modular x offsets
+    # alias (pmod(x-r) == pmod(x+r')), the same cell is emitted twice,
+    # and downstream radius joins double-count pairs — raise instead of
+    # silently breaking the exactly-once-match invariant
+    if 2 * int(ring) + 1 > nx:
         raise ValueError(
-            f"ring={ring} wraps onto itself at chars={chars} "
-            f"(2*ring+1 > {1 << lon_bits} lon cells)"
+            f"ring={ring} wraps onto itself at {grid} "
+            f"(2*ring+1 > {nx} x cells)"
         )
-    xs, ys = GH.geohash_xy_sql(lon, lat, chars, "spark")
-    base = points.select(
+    base = df.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
         F.expr(xs).alias("__x"),
         F.expr(ys).alias("__y"),
     )
     offsets = local_frame(
-        spark,
+        df.sparkSession,
         [(k, dx, dy) for k, (dx, dy) in enumerate(ring_offsets(ring))],
         "k int, dx int, dy int",
     )
-    m = 1 << lon_bits
-    joined = base.join(F.broadcast(offsets))
-    xn = f"pmod(__x + dx, {m})"
+    xn = f"pmod(__x + dx, {nx})"
     yn = "(__y + dy)"
-    code = GH.interleave_sql(f"({xn})", f"({yn})", chars, "spark")
     return (
-        joined.filter(F.expr(f"{yn} >= 0 AND {yn} < {1 << lat_bits}"))
+        base.join(F.broadcast(offsets))
+        .filter(F.expr(f"{yn} >= 0 AND {yn} < {ny}"))
         .select(
             F.col(id_col),
             *[F.col(c) for c in carry_cols],
             F.col("k").cast("long"),
-            F.expr(code).cast("long").alias("neighbor"),
+            F.expr(encode(f"({xn})", f"({yn})")).cast("long").alias("neighbor"),
         )
     )
 
 
-def _cell_span(chars: int) -> tuple[int, int]:
-    """(lon_bits, min axis span in 1e-7-deg units) at a geohash depth —
-    THE span formula; auto depth selection and the radius join's recall
-    check must agree on it, so it lives in exactly one place."""
+def _cell_span(chars: int) -> tuple[int, int, int]:
+    """(lon_bits, min axis span, cell area) at a geohash depth, in
+    1e-7-deg units — THE span formula; auto depth selection and the
+    radius join's recall check must agree on it, so it lives in exactly
+    one place."""
     from ..functions import geohash as GH
 
     lon_bits, lat_bits = GH._bits_for(chars)
-    return lon_bits, min(
-        3600000000 // (1 << lon_bits), 1800000000 // (1 << lat_bits)
-    )
+    span_lon = 3600000000 // (1 << lon_bits)
+    span_lat = 1800000000 // (1 << lat_bits)
+    return lon_bits, min(span_lon, span_lat), span_lon * span_lat
 
 
 def _finest_chars(need: int, max_chars: int, what: str, ring: int = 1) -> int:
     """Largest chars whose min axis span >= need AND whose lon grid is
     wide enough that a `ring` expansion cannot wrap onto itself."""
     for c in range(int(max_chars), 0, -1):
-        lon_bits, span = _cell_span(c)
+        lon_bits, span, _ = _cell_span(c)
         if span >= need and 2 * int(ring) + 1 <= (1 << lon_bits):
             return c
     raise ValueError(f"{what} exceeds the whole-world cell span even at chars=1")
@@ -280,16 +303,11 @@ def auto_radius_grid(
     ring * min_axis_span >= d_fixed (two points within d differ by at
     most `ring` cells per axis), and the lon grid must be wide enough
     that the modular ring cannot wrap onto itself."""
-    from ..functions import geohash as GH
-
     if int(d_fixed) <= 0:
         raise ValueError(f"d_fixed={d_fixed} must be positive")
     best: tuple[int, int, int] | None = None  # (area, ring, chars)
     for c in range(1, int(max_chars) + 1):
-        lon_bits, lat_bits = GH._bits_for(c)
-        span_lon = 3600000000 // (1 << lon_bits)
-        span_lat = 1800000000 // (1 << lat_bits)
-        span = min(span_lon, span_lat)
+        lon_bits, span, cell_area = _cell_span(c)
         if span <= 0:
             continue
         ring = -(-int(d_fixed) // span)
@@ -298,7 +316,7 @@ def auto_radius_grid(
             continue
         if w > (1 << lon_bits):  # modular ring would wrap onto itself
             continue
-        area = (w * span_lon) * (w * span_lat)
+        area = w * w * cell_area
         if best is None or (area, ring) < best[:2]:
             best = (area, ring, c)
     if best is None:
@@ -336,53 +354,17 @@ def qt_neighbors(
     z = int(level)
     if not 1 <= z <= 20:
         raise ValueError(f"level={z} outside [1, 20]")
-    # wrap-collision guard (see geohash_neighbors): at level 1 even
-    # ring=1 aliases W onto E (m=2), emitting duplicate neighbors
-    if 2 * int(ring) + 1 > (1 << z):
-        raise ValueError(
-            f"ring={ring} wraps onto itself at level={z} "
-            f"(2*ring+1 > {1 << z} x cells)"
-        )
-    reserved = {"k", "dx", "dy", "neighbor", "__x", "__y"} & (
-        {id_col, qt_col} | set(carry_cols)
-    )
-    if reserved:
-        raise ValueError(
-            f"column(s) {sorted(reserved)} collide with qt_neighbors' "
-            f"internal names; rename them first"
-        )
-    spark = cells.sparkSession
-    xs = QS.qt_to_x_sql(qt_col, z, QS.SPARK)
-    ys = QS.qt_to_y_sql(qt_col, z, QS.SPARK)
     guard_x = (
-        f"CASE WHEN {QS.qt_depth_sql(qt_col)} = {z} THEN {xs} "
+        f"CASE WHEN {QS.qt_depth_sql(qt_col)} = {z} "
+        f"THEN {QS.qt_to_x_sql(qt_col, z, QS.SPARK)} "
         f"ELSE CAST(raise_error('qt_neighbors: cell depth != {z}; "
         f"qt_round first') AS BIGINT) END"
     )
-    base = cells.select(
-        F.col(id_col),
-        *[F.col(c) for c in carry_cols],
-        F.expr(guard_x).alias("__x"),
-        F.expr(ys).alias("__y"),
-    )
-    offsets = local_frame(
-        spark,
-        [(k, dx, dy) for k, (dx, dy) in enumerate(ring_offsets(ring))],
-        "k int, dx int, dy int",
-    )
-    m = 1 << z
-    joined = base.join(F.broadcast(offsets))
-    xn = f"pmod(__x + dx, {m})"
-    yn = "(__y + dy)"
-    code = QS.qt_from_xyz_sql(f"({xn})", f"({yn})", z, QS.SPARK)
-    return (
-        joined.filter(F.expr(f"{yn} >= 0 AND {yn} < {m}"))
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            F.col("k").cast("long"),
-            F.expr(code).cast("long").alias("neighbor"),
-        )
+    return _ring_neighbors(
+        cells, id_col, carry_cols, {qt_col}, guard_x,
+        QS.qt_to_y_sql(qt_col, z, QS.SPARK), 1 << z, 1 << z, ring,
+        lambda x, y: QS.qt_from_xyz_sql(x, y, z, QS.SPARK),
+        "qt_neighbors", f"level={z}",
     )
 
 
@@ -459,7 +441,7 @@ def _radius_join_impl(
         # validation below raises when the span cannot cover d_fixed
         # (silently widening the ring would hide a mis-derived grid)
         ring = 1
-    _, span = _cell_span(chars)
+    _, span, _ = _cell_span(chars)
     if not 0 < int(d_fixed) <= int(ring) * span:
         raise ValueError(
             f"d_fixed={d_fixed} outside (0, {ring * span}] for chars={chars}, "
@@ -546,6 +528,21 @@ def _radius_join_impl(
     return pairs, proj if cache else None
 
 
+def _both_ways(pairs: DataFrame, *cols: str) -> DataFrame:
+    """(a, b, *cols) pair rows in both directions, from ONE explode of
+    array(struct(a, b, ...), struct(b, a, ...)): a union of the pairs with
+    their own swap would evaluate the whole pair subtree twice (the
+    union-branch recompute trap from CLAUDE.md)."""
+    return pairs.select(
+        F.explode(
+            F.array(
+                F.struct("a", "b", *cols),
+                F.struct(F.col("b").alias("a"), F.col("a").alias("b"), *cols),
+            )
+        ).alias("s")
+    ).select("s.a", "s.b", *[f"s.{c}" for c in cols])
+
+
 def knn_within_radius(
     points: DataFrame,
     d_fixed: int,
@@ -580,26 +577,11 @@ def knn_within_radius(
     pairs, proj = _radius_join_impl(
         points, d_fixed, lon, lat, chars, id_col, ring=None, cache=True
     )
-    # symmetrize by exploding each row into both directions in ONE pass —
-    # a union of pairs with its own swap would evaluate the whole
-    # radius-join subtree twice (the union-branch recompute trap from
-    # CLAUDE.md).
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b"), F.col("dist_sq")),
-                F.struct(
-                    F.col("b").alias("a"),
-                    F.col("a").alias("b"),
-                    F.col("dist_sq"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.a", "s.b", "s.dist_sq")
     from .text import top_k_per_group
 
     ranked = top_k_per_group(
-        sym, group="a", order="dist_sq", k=k, id_col="b", ascending=True
+        _both_ways(pairs, "dist_sq"), group="a", order="dist_sq", k=k,
+        id_col="b", ascending=True,
     )
     res = ranked.localCheckpoint(eager=True)
     proj.unpersist()
@@ -623,6 +605,88 @@ def auto_bbox_chars(
     return _finest_chars(need, max_chars, f"max_span_fixed={max_span_fixed}")
 
 
+def grid_cover(
+    df: DataFrame,
+    box: tuple[str, str, str, str],
+    chars: int,
+    max_cells_per_axis: int,
+    what: str,
+) -> DataFrame:
+    """`df` with one row per depth-`chars` geohash cell its box touches,
+    in (__cx, __cy) after the caller's columns — the covering step of
+    every grid candidate join.  `box` is (minlon, minlat, maxlon, maxlat)
+    as raw fixed-point SQL over df's columns.
+
+    One guard inside the projection raises, naming `what`, on an
+    inverted box (hi < lo, checked on the raw coordinates first: an
+    inverted box whose corners share a cell passes the grid-space check)
+    and on a covering wider than `max_cells_per_axis` cells on an axis —
+    a silent clamp would break recall."""
+    from ..functions import geohash as GH
+
+    mnx, mny, mxx, mxy = box
+    x0s, y0s = GH.geohash_xy_sql(mnx, mny, chars, "spark")
+    x1s, y1s = GH.geohash_xy_sql(mxx, mxy, chars, "spark")
+    mca = int(max_cells_per_axis)
+
+    def guarded(lo: str, hi: str, raw_lo: str, raw_hi: str, axis: str) -> str:
+        return (
+            f"CASE WHEN ({raw_hi}) < ({raw_lo}) OR ({hi}) < ({lo}) "
+            f"THEN CAST(raise_error('{what}: inverted bbox on {axis}') "
+            f"AS BIGINT) "
+            f"WHEN ({hi}) - ({lo}) < {mca} THEN ({hi}) "
+            f"ELSE CAST(raise_error('{what}: covering exceeds {mca} "
+            f"cells on {axis}') AS BIGINT) END"
+        )
+
+    cols = [F.col(c) for c in df.columns]
+    return (
+        df.select(
+            *cols,
+            F.expr(x0s).alias("__cx0"),
+            F.expr(y0s).alias("__cy0"),
+            F.expr(guarded(x0s, x1s, mnx, mxx, "lon")).alias("__cx1"),
+            F.expr(guarded(y0s, y1s, mny, mxy, "lat")).alias("__cy1"),
+        )
+        .select(
+            *cols,
+            F.explode(F.expr("sequence(__cx0, __cx1)")).alias("__cx"),
+            "__cy0",
+            "__cy1",
+        )
+        .select(
+            *cols,
+            "__cx",
+            F.explode(F.expr("sequence(__cy0, __cy1)")).alias("__cy"),
+        )
+    )
+
+
+def box_pair_keep(
+    a_box: tuple[str, str, str, str],
+    b_box: tuple[str, str, str, str],
+    chars: int,
+) -> Column:
+    """True when the two (minlon, minlat, maxlon, maxlat) boxes intersect
+    and the row's (__cx, __cy) is the depth-`chars` cell holding the
+    intersection's lower-left corner — the reference-point filter that
+    emits each intersecting pair of a grid_cover self-join from exactly
+    ONE cell, with no distinct shuffle (Dittrich & Seeger, ICDE 2000).
+    Recall-complete: that corner lies in both boxes' coverings."""
+    from ..functions import geohash as GH
+
+    amnx, amny, amxx, amxy = a_box
+    bmnx, bmny, bmxx, bmxy = b_box
+    rx, ry = GH.geohash_xy_sql(
+        f"GREATEST({amnx}, {bmnx})", f"GREATEST({amny}, {bmny})", chars, "spark"
+    )
+    return F.expr(
+        f"{amnx} <= {bmxx} AND {bmnx} <= {amxx} AND "
+        f"{amny} <= {bmxy} AND {bmny} <= {amxy} AND "
+        f"__cx = {rx} AND __cy = {ry}"
+    )
+
+
 def bbox_intersection_join(
     boxes: DataFrame,
     chars: int | None = 6,
@@ -632,71 +696,28 @@ def bbox_intersection_join(
     max_span_fixed: int | None = None,
 ) -> DataFrame:
     """Self-join of bboxes on exact rectangle intersection via the
-    integer geohash-grid covering: each box explodes into the depth-
-    `chars` grid cells it touches, candidates equi-join on the cell, and
-    each surviving pair is emitted from exactly ONE cell — the cell
-    containing the intersection's lower-left corner (the reference-point
-    dedup from the partitioned-spatial-join literature), so no distinct
-    shuffle is needed.  Recall-complete: the reference point of every
-    intersecting pair lies in both coverings.
+    integer geohash-grid covering (grid_cover): each box explodes into
+    the depth-`chars` grid cells it touches, candidates equi-join on the
+    cell, and each surviving pair is emitted from exactly ONE cell
+    (box_pair_keep's reference-point filter), so no distinct shuffle is
+    needed.
 
     Coverings are bounded by `max_cells_per_axis` (a box spanning more
-    cells raises inside the projection — a silent clamp would break
-    recall; lower `chars` for planet-scale boxes).  chars=None derives
-    the finest depth from `max_span_fixed` (the caller's bound on the
-    largest box edge) via auto_bbox_chars — the in-projection raise
-    still guards boxes exceeding the claimed bound.  Pure int64 math
-    shared with the DuckDB oracle; boxes must not cross the antimeridian
-    (minlon <= maxlon)."""
-    from pyspark.sql import functions as F
-
-    from ..functions import geohash as GH
-
+    cells raises inside the projection — lower `chars` for planet-scale
+    boxes).  chars=None derives the finest depth from `max_span_fixed`
+    (the caller's bound on the largest box edge) via auto_bbox_chars —
+    the in-projection raise still guards boxes exceeding the claimed
+    bound.  Pure int64 math shared with the DuckDB oracle; boxes must not
+    cross the antimeridian (minlon <= maxlon)."""
     if chars is None:
         if max_span_fixed is None:
             raise ValueError("chars=None needs max_span_fixed to derive a depth")
         chars = auto_bbox_chars(max_span_fixed, max_cells_per_axis)
 
     mnx, mny, mxx, mxy = cols
-    x0s, y0s = GH.geohash_xy_sql(mnx, mny, chars, "spark")
-    x1s, y1s = GH.geohash_xy_sql(mxx, mxy, chars, "spark")
-
-    def guarded(lo: str, hi: str, raw_lo: str, raw_hi: str, axis: str) -> str:
-        # inverted boxes (hi < lo) must raise, not silently emit a
-        # descending sequence() covering and garbage negative areas.
-        # The raw-coordinate check comes first: an inverted box whose
-        # corners fall in the SAME grid cell passes the grid-space check
-        # (hi == lo) yet still yields a negative ix_area downstream.
-        return (
-            f"CASE WHEN ({raw_hi}) < ({raw_lo}) OR ({hi}) < ({lo}) "
-            f"THEN CAST(raise_error('inverted bbox on {axis} "
-            f"(min > max); split antimeridian-crossing boxes first') "
-            f"AS BIGINT) "
-            f"WHEN ({hi}) - ({lo}) < {int(max_cells_per_axis)} THEN ({hi}) "
-            f"ELSE CAST(raise_error('bbox covering exceeds "
-            f"{int(max_cells_per_axis)} cells on {axis}; lower chars') "
-            f"AS BIGINT) END"
-        )
-
-    base = boxes.select(
-        F.col(id_col),
-        *[F.col(c) for c in cols],
-        F.expr(x0s).alias("__x0"),
-        F.expr(y0s).alias("__y0"),
-        F.expr(guarded(x0s, x1s, mnx, mxx, "lon")).alias("__x1"),
-        F.expr(guarded(y0s, y1s, mny, mxy, "lat")).alias("__y1"),
-    )
-    cells = base.select(
-        F.col(id_col),
-        *[F.col(c) for c in cols],
-        F.explode(F.expr("sequence(__x0, __x1)")).alias("__cx"),
-        "__y0",
-        "__y1",
-    ).select(
-        F.col(id_col),
-        *[F.col(c) for c in cols],
-        "__cx",
-        F.explode(F.expr("sequence(__y0, __y1)")).alias("__cy"),
+    cells = grid_cover(
+        boxes.select(id_col, *cols), cols, chars, max_cells_per_axis,
+        "bbox_intersection_join",
     )
     a = cells.select(
         F.col(id_col).alias("a"),
@@ -710,37 +731,24 @@ def bbox_intersection_join(
         "__cx",
         "__cy",
     )
-    rx, ry = GH.geohash_xy_sql(
-        f"GREATEST(a_{mnx}, b_{mnx})", f"GREATEST(a_{mny}, b_{mny})", chars, "spark"
-    )
     return (
         a.join(b, ["__cx", "__cy"])
         .filter(F.col("a") < F.col("b"))
         .filter(
-            (F.col(f"a_{mnx}") <= F.col(f"b_{mxx}"))
-            & (F.col(f"b_{mnx}") <= F.col(f"a_{mxx}"))
-            & (F.col(f"a_{mny}") <= F.col(f"b_{mxy}"))
-            & (F.col(f"b_{mny}") <= F.col(f"a_{mxy}"))
+            box_pair_keep(
+                tuple(f"a_{c}" for c in cols), tuple(f"b_{c}" for c in cols),
+                chars,
+            )
         )
-        # reference-point dedup: emit only from the cell holding the
-        # intersection's lower-left corner
-        .filter(
-            (F.col("__cx") == F.expr(rx)) & (F.col("__cy") == F.expr(ry))
+        .select(
+            "a",
+            "b",
+            F.expr(
+                f"CAST((LEAST(a_{mxx}, b_{mxx}) - GREATEST(a_{mnx}, b_{mnx}))"
+                f" * (LEAST(a_{mxy}, b_{mxy}) - GREATEST(a_{mny}, b_{mny}))"
+                f" AS BIGINT)"
+            ).alias("ix_area"),
         )
-        .withColumn(
-            "ix_area",
-            (
-                (
-                    F.least(F.col(f"a_{mxx}"), F.col(f"b_{mxx}"))
-                    - F.greatest(F.col(f"a_{mnx}"), F.col(f"b_{mnx}"))
-                )
-                * (
-                    F.least(F.col(f"a_{mxy}"), F.col(f"b_{mxy}"))
-                    - F.greatest(F.col(f"a_{mny}"), F.col(f"b_{mny}"))
-                )
-            ).cast("long"),
-        )
-        .select("a", "b", "ix_area")
     )
 
 
@@ -882,22 +890,11 @@ def knn_great_circle(
         points, d_meters, lon, lat, id_col, max_abs_lat_fixed, chars,
         ring=None, cache=True,
     )
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("a"), F.col("b"), F.col("hav_ppq")),
-                F.struct(
-                    F.col("b").alias("a"),
-                    F.col("a").alias("b"),
-                    F.col("hav_ppq"),
-                ),
-            )
-        ).alias("s")
-    ).select("s.a", "s.b", "s.hav_ppq")
     from .text import top_k_per_group
 
     ranked = top_k_per_group(
-        sym, group="a", order="hav_ppq", k=k, id_col="b", ascending=True
+        _both_ways(pairs, "hav_ppq"), group="a", order="hav_ppq", k=k,
+        id_col="b", ascending=True,
     )
     if sink is None:
         res = ranked.localCheckpoint(eager=True)
@@ -959,20 +956,7 @@ def dbscan_metric(
         points, eps_meters, lon, lat, id_col, max_abs_lat_fixed, chars,
         ring=None, cache=True,
     )
-    # ONE explode, not union-with-swap (union branches re-evaluate their
-    # whole subtree — the pair join would run twice)
-    sym = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a"), F.col("b")),
-                    F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
-                )
-            ).alias("s")
-        )
-        .select("s.a", "s.b")
-        .persist()
-    )
+    sym = _both_ways(pairs).persist()
     sym.count()  # eager drive, then the expensive upstream can go
     if proj is not None:
         proj.unpersist()
@@ -1089,33 +1073,14 @@ def pair_distance_histogram(
         F.expr(xs).alias("__cx"),
         F.expr(ys).alias("__cy"),
     )
-    x0s, y0s = GH.geohash_xy_sql(f"({lon}) - {rmax}", f"({lat}) - {rmax}", chars, SPARK)
-    x1s, y1s = GH.geohash_xy_sql(f"({lon}) + {rmax}", f"({lat}) + {rmax}", chars, SPARK)
-    mca = int(max_cells_per_axis)
-
-    def guarded(lo: str, hi: str, axis: str) -> str:
-        return (
-            f"CASE WHEN ({hi}) - ({lo}) < {mca} THEN ({hi}) "
-            f"ELSE CAST(raise_error('pair_distance_histogram: disc "
-            f"covering exceeds {mca} cells on {axis}') AS BIGINT) END"
-        )
-
-    a = points.select(
-        F.col(id_col).alias("__ida"),
-        F.col(lon).cast("long").alias("__ax"),
-        F.col(lat).cast("long").alias("__ay"),
-        F.expr(x0s).alias("__x0"),
-        F.expr(y0s).alias("__y0"),
-        F.expr(guarded(x0s, x1s, "lon")).alias("__x1"),
-        F.expr(guarded(y0s, y1s, "lat")).alias("__y1"),
-    )
-    acell = a.select(
-        "__ida", "__ax", "__ay",
-        F.explode(F.expr("sequence(__x0, __x1)")).alias("__cx"),
-        "__y0", "__y1",
-    ).select(
-        "__ida", "__ax", "__ay", "__cx",
-        F.explode(F.expr("sequence(__y0, __y1)")).alias("__cy"),
+    acell = grid_cover(
+        points.select(
+            F.col(id_col).alias("__ida"),
+            F.col(lon).cast("long").alias("__ax"),
+            F.col(lat).cast("long").alias("__ay"),
+        ),
+        (f"__ax - {rmax}", f"__ay - {rmax}", f"__ax + {rmax}", f"__ay + {rmax}"),
+        chars, max_cells_per_axis, "pair_distance_histogram",
     )
     d2 = "(__ax - __bx) * (__ax - __bx) + (__ay - __by) * (__ay - __by)"
     bounds = [0] + [int(r) * int(r) for r in radii_fixed]

@@ -534,6 +534,16 @@ def time_in_fence(
     )
 
 
+HAUSDORFF_MAX_PAIR_POINTS = 4_000_000
+"""Largest |A|·|B| (decimated point pairs) track_hausdorff accepts for
+one candidate pair.  _hausdorff_mm_udf evaluates a pair's whole chord
+matrix in one chunk, at a peak of about 104 bytes of numpy temporaries
+per point pair (measured with tracemalloc), so the cap bounds one
+kernel call at about 420 MB of Python-worker memory.  Larger pairs raise
+in the candidate projection, before the kernel runs; a larger `step`
+decimates them under the cap."""
+
+
 @F.pandas_udf(LongType())
 def _hausdorff_mm_udf(
     axs: pd.Series, ays: pd.Series, bxs: pd.Series, bys: pd.Series
@@ -654,16 +664,17 @@ def track_hausdorff(
     Scale shape (r8): ONE entity-keyed aggregate builds bbox + count +
     the decimated point arrays per entity, persisted across its
     consumers (the r4 cache-lifecycle pattern).  Candidates come from
-    the grid-covered cell EQUI-join with reference-point dedup — the
-    same machinery as segment_crossings / bbox_intersection_join, at a
-    depth derived from the largest track bbox (one aggregate-only
-    scan), never a nested loop over entity pairs.  The |A|·|B| distance
-    work (inherent to discrete Hausdorff, bounded by `step` decimation)
-    runs INSIDE one vectorized Arrow batch per candidate-pair row: the
-    point arrays ride the two entity joins, and a numpy kernel
-    evaluates the exact per-pair chord matrix (elementwise identical to
-    _chord_mm_udf — same hav_np ops, same floor) plus both directed
-    maxima with segment-reductions, emitting one int64 per pair.  That
+    the grid-covered cell EQUI-join with reference-point dedup
+    (spatial_join.grid_cover / box_pair_keep), at a depth derived from
+    the largest track bbox (one aggregate-only scan), never a nested
+    loop over entity pairs.  The |A|·|B| distance work (inherent to
+    discrete Hausdorff, bounded by `step` decimation and capped per pair
+    at HAUSDORFF_MAX_PAIR_POINTS) runs INSIDE one vectorized Arrow batch
+    per candidate-pair row: the point arrays ride the two entity joins,
+    and a numpy kernel evaluates the exact per-pair chord matrix
+    (elementwise identical to _chord_mm_udf — same hav_np ops, same
+    floor) plus both directed maxima with segment-reductions, emitting
+    one int64 per pair.  That
     replaces the former pair×|A|×|B| join + double-explode +
     (pair·(|A|+|B|))-group aggregation — the r7 bench's single most
     expensive query at the driver's escalated SF — with an
@@ -694,9 +705,7 @@ def _track_hausdorff_plan(
     """Lazy track_hausdorff frame + the persisted track index backing
     it (caller materializes then unpersists) — split out so tests and
     plan captures can inspect the pre-checkpoint physical plan."""
-    from .spatial_join import auto_bbox_chars
-
-    from ..functions import geohash as GH
+    from .spatial_join import auto_bbox_chars, box_pair_keep, grid_cover
 
     if step < 1:
         raise ValueError(f"step={step} must be >= 1")
@@ -728,8 +737,8 @@ def _track_hausdorff_plan(
     )
     # depth for the covering: finest grid where the LARGEST track bbox
     # stays within the per-axis cell cap (aggregate-only scan over the
-    # persisted index — the in-covering raise guard of the generic
-    # bbox join cannot fire at a depth derived from the true maximum)
+    # persisted index — grid_cover's raise guard cannot fire at a
+    # depth derived from the true maximum)
     srow = tracks.agg(
         F.max(
             F.greatest(
@@ -741,31 +750,10 @@ def _track_hausdorff_plan(
     span_max = max(int(srow["s"] or 0), 1)
     chars = auto_bbox_chars(span_max, max_cells_per_axis=64)
 
-    x0s, y0s = GH.geohash_xy_sql("__minx", "__miny", chars, "spark")
-    x1s, y1s = GH.geohash_xy_sql("__maxx", "__maxy", chars, "spark")
     light = ["__minx", "__maxx", "__miny", "__maxy", "__n"]
-    cells = (
-        tracks.select(
-            F.col(id_col),
-            *light,
-            F.expr(x0s).alias("__cx0"),
-            F.expr(y0s).alias("__cy0"),
-            F.expr(x1s).alias("__cx1"),
-            F.expr(y1s).alias("__cy1"),
-        )
-        .select(
-            F.col(id_col),
-            *light,
-            F.explode(F.expr("sequence(__cx0, __cx1)")).alias("__cx"),
-            "__cy0",
-            "__cy1",
-        )
-        .select(
-            F.col(id_col),
-            *light,
-            "__cx",
-            F.explode(F.expr("sequence(__cy0, __cy1)")).alias("__cy"),
-        )
+    cells = grid_cover(
+        tracks.select(F.col(id_col), *light),
+        ("__minx", "__miny", "__maxx", "__maxy"), chars, 64, "track_hausdorff",
     )
     a = cells.select(
         F.col(id_col).alias("__ua"),
@@ -777,10 +765,6 @@ def _track_hausdorff_plan(
         *[F.col(c).alias("__b" + c.lstrip("_")) for c in light],
         "__cx", "__cy",
     )
-    rx, ry = GH.geohash_xy_sql(
-        "GREATEST(__aminx, __bminx)", "GREATEST(__aminy, __bminy)",
-        chars, "spark",
-    )
     # the cell join explodes (up to per-cell population² pair rows from
     # entity-count-sized inputs) behind a tiny pre-join shuffle: pin
     # its stage (see _radius_join_impl — same measured trap)
@@ -789,19 +773,23 @@ def _track_hausdorff_plan(
         .join(pin(b, "__cx", "__cy"), ["__cx", "__cy"])
         .filter(F.col("__ua") < F.col("__ub"))
         .filter(
-            (F.col("__aminx") <= F.col("__bmaxx"))
-            & (F.col("__bminx") <= F.col("__amaxx"))
-            & (F.col("__aminy") <= F.col("__bmaxy"))
-            & (F.col("__bminy") <= F.col("__amaxy"))
-        )
-        # reference-point dedup: each surviving pair is emitted from
-        # exactly the cell holding the intersection's lower-left corner
-        .filter(
-            (F.col("__cx") == F.expr(rx)) & (F.col("__cy") == F.expr(ry))
+            box_pair_keep(
+                ("__aminx", "__aminy", "__amaxx", "__amaxy"),
+                ("__bminx", "__bminy", "__bmaxx", "__bmaxy"),
+                chars,
+            )
         )
         .select(
             "__ua", "__ub",
-            F.col("__an").alias("n_a"), F.col("__bn").alias("n_b"),
+            # the kernel evaluates a pair's whole |A|x|B| chord matrix in
+            # one chunk: refuse oversized pairs here, before it allocates
+            F.expr(
+                f"CASE WHEN __an * __bn <= {HAUSDORFF_MAX_PAIR_POINTS} "
+                f"THEN __an ELSE CAST(raise_error('track_hausdorff: a "
+                f"track pair exceeds {HAUSDORFF_MAX_PAIR_POINTS} point "
+                f"pairs; pass a larger step') AS BIGINT) END"
+            ).alias("n_a"),
+            F.col("__bn").alias("n_b"),
         )
     )
     arr_a = tracks.select(
@@ -932,13 +920,13 @@ def segment_crossings(
     the exact crossing test overflow-free (segment_cross_sql).
 
     Candidates come from the depth-`chars` geohash-grid covering of
-    each segment's bbox (chars=None derives the finest depth from
-    max_span_fixed via auto_bbox_chars); pairs equi-join on the cell
-    and each surviving pair is emitted from exactly ONE cell — the cell
-    holding the two bboxes' intersection lower-left corner (the
-    reference-point dedup, same as bbox_intersection_join) — so no
-    distinct shuffle.  Recall-complete: two crossing segments have
-    intersecting bboxes, whose reference point lies in both coverings.
+    each segment's bbox (spatial_join.grid_cover; chars=None derives the
+    finest depth from max_span_fixed via auto_bbox_chars); pairs
+    equi-join on the cell and each surviving pair is emitted from
+    exactly ONE cell (spatial_join.box_pair_keep's reference-point
+    filter) — so no distinct shuffle.  Recall-complete: two crossing
+    segments have intersecting bboxes, whose reference point lies in
+    both coverings.
 
     Returns (user_a, user_b, crossings) with user_a < user_b, one row
     per entity pair with >= 1 proper crossing.
@@ -950,9 +938,7 @@ def segment_crossings(
     handling covers hot cells; lower `chars` if a cell's segment count
     goes quadratic), and a partial-aggregating count on the pair key.
     No all-pairs stage anywhere; everything JVM-side integer SQL."""
-    from .spatial_join import auto_bbox_chars
-
-    from ..functions import geohash as GH
+    from .spatial_join import auto_bbox_chars, box_pair_keep, grid_cover
 
     S = int(max_span_fixed)
     if S <= 0 or S > 500_000_000:
@@ -971,38 +957,13 @@ def segment_crossings(
         .withColumn("__mxy", F.greatest("__y1", "__y2"))
     )
 
-    x0s, y0s = GH.geohash_xy_sql("__mnx", "__mny", chars, "spark")
-    x1s, y1s = GH.geohash_xy_sql("__mxx", "__mxy", chars, "spark")
     # extent <= S plus auto depth keeps coverings under the cap; the
     # raise guards explicit-chars callers (a silent clamp breaks recall)
-    mca = int(max_cells_per_axis)
-
-    def guarded(lo: str, hi: str, axis: str) -> str:
-        return (
-            f"CASE WHEN ({hi}) - ({lo}) < {mca} THEN ({hi}) "
-            f"ELSE CAST(raise_error('segment covering exceeds {mca} "
-            f"cells on {axis}; lower chars or max_span_fixed') "
-            f"AS BIGINT) END"
-        )
-
     carry = ["__uid", "__x1", "__y1", "__x2", "__y2",
              "__mnx", "__mny", "__mxx", "__mxy"]
-    base = seg.select(
-        *carry,
-        F.expr(x0s).alias("__cx0"),
-        F.expr(y0s).alias("__cy0"),
-        F.expr(guarded(x0s, x1s, "lon")).alias("__cx1"),
-        F.expr(guarded(y0s, y1s, "lat")).alias("__cy1"),
-    )
-    cells = base.select(
-        *carry,
-        F.explode(F.expr("sequence(__cx0, __cx1)")).alias("__cx"),
-        "__cy0",
-        "__cy1",
-    ).select(
-        *carry,
-        "__cx",
-        F.explode(F.expr("sequence(__cy0, __cy1)")).alias("__cy"),
+    cells = grid_cover(
+        seg.select(*carry), ("__mnx", "__mny", "__mxx", "__mxy"), chars,
+        max_cells_per_axis, "segment_crossings",
     )
     a = cells.select(
         *[F.col(c).alias("a" + c.lstrip("_")) for c in carry], "__cx", "__cy"
@@ -1010,19 +971,16 @@ def segment_crossings(
     b = cells.select(
         *[F.col(c).alias("b" + c.lstrip("_")) for c in carry], "__cx", "__cy"
     )
-    rx, ry = GH.geohash_xy_sql(
-        "GREATEST(amnx, bmnx)", "GREATEST(amny, bmny)", chars, "spark"
-    )
     pairs = (
         a.join(b, ["__cx", "__cy"])
         .filter(F.col("auid") < F.col("buid"))
         .filter(
-            (F.col("amnx") <= F.col("bmxx"))
-            & (F.col("bmnx") <= F.col("amxx"))
-            & (F.col("amny") <= F.col("bmxy"))
-            & (F.col("bmny") <= F.col("amxy"))
+            box_pair_keep(
+                ("amnx", "amny", "amxx", "amxy"),
+                ("bmnx", "bmny", "bmxx", "bmxy"),
+                chars,
+            )
         )
-        .filter((F.col("__cx") == F.expr(rx)) & (F.col("__cy") == F.expr(ry)))
         .filter(
             F.expr(
                 segment_cross_sql(

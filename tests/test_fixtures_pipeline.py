@@ -77,6 +77,19 @@ def test_tile_synthetic_images_persist_flag_is_cache_only(spark):
     assert got[True] == got[False]
 
 
+def test_tile_assignment_gate_leaves_no_cache(spark):
+    """The gate's frame is built without caching the encoded cells: a
+    persisted input of assign_tiles is unreachable from the returned frame,
+    so nothing could release it."""
+    from osmquadtree_rust_spark import gate as G
+
+    spark.catalog.clearCache()
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    G.GATE["tile_assignment"]["spark"](spark, "unused")
+    assert persistent().size() == before
+
+
 def test_write_tiles_salted(spark, tmp_path):
     n = 5000
     assigned, groups = P.tile_synthetic_images(spark, n, target=1000)

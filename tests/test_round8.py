@@ -197,6 +197,32 @@ def test_hausdorff_kernel_chunk_boundaries():
     assert len(f(e, e, e, e)) == 0
 
 
+def test_track_hausdorff_refuses_pair_over_cap(spark):
+    """A pair of overlapping step-1 tracks whose |A|*|B| exceeds the cap
+    raises in the candidate projection (a stage before the kernel), and
+    the same tracks decimated under the cap run."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from osmquadtree_rust_spark.operators.trajectory import (
+        HAUSDORFF_MAX_PAIR_POINTS,
+        track_hausdorff,
+    )
+
+    n = math.isqrt(HAUSDORFF_MAX_PAIR_POINTS) + 1
+    ev = spark.range(2 * n).select(
+        (F.col("id") >= n).cast("long").alias("user_id"),
+        F.col("id").alias("event_id"),
+        ((F.col("id") % n) * 100).alias("lon"),
+        ((F.col("id") % 7) * 100).alias("lat"),
+    )
+    with pytest.raises(Exception, match="exceeds .* point pairs; pass a larger step"):
+        track_hausdorff(ev, step=1).collect()
+    (row,) = track_hausdorff(ev, step=2).collect()
+    assert row["n_a"] * row["n_b"] <= HAUSDORFF_MAX_PAIR_POINTS
+
+
 # ---------------------------------------------------------------------------
 # token_cooccurrence pairs-in-array rewrite and with_bigram_surprisal
 # single-lineage rewrite: seeded nets vs pure python
